@@ -503,15 +503,17 @@ object Dedup {
     * (doc, h) row set back to the df table (the corpus-sized shuffle) with
     * two map-side-combined aggregates and one doc-grain broadcast join.
     * Shingles cross the wire as 64-bit md5-derived hashes, never strings.
-    * Every doc yields ≥1 shingle (the shingle generator floors at one
-    * window), so the left join's null-fill only covers docs whose shingles
-    * all recur elsewhere. */
+    * Every non-null doc yields ≥1 shingle (the shingle generator floors at
+    * one window), so the left join's null-fill only covers docs whose
+    * shingles all recur elsewhere. */
   def docNovelty(spark: SparkSession, sfDir: String): DataFrame = {
     val rows = Tables.documents(spark, sfDir)
       .withColumn("words", split(col("text"), " "))
       .select(col("doc_id"), explode(array_distinct(expr(shinglesExpr))).as("s"))
       .select(col("doc_id"), Exprs.md5num(col("s")).as("h"))
+    // a null-text doc has no shingles, so no row (the oracle's inner join)
     val perDoc = Tables.documents(spark, sfDir)
+      .filter(col("text").isNotNull)
       .withColumn("words", split(col("text"), " "))
       .select(col("doc_id"),
         size(array_distinct(expr(shinglesExpr))).cast("long").as("n_shingles"))

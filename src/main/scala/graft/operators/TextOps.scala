@@ -2590,8 +2590,11 @@ object TextOps {
     * sums of those grid scores (string-encoded, tie-broken
     * lexicographically), so the oracle — which replays the EM counts and
     * the unrolled DP relationally, [[unigramLmSql]] — is bit-exact. */
-  def unigramLm(spark: SparkSession, sfDir: String, rounds: Int = 2,
-      multiCap: Int = 200, maxLen: Int = 16, pieceMax: Int = 4): DataFrame = {
+  def unigramLm(spark: SparkSession, sfDir: String,
+      rounds: Int = UnigramDefaults.Rounds,
+      multiCap: Int = UnigramDefaults.MultiCap,
+      maxLen: Int = UnigramDefaults.MaxLen,
+      pieceMax: Int = UnigramDefaults.PieceMax): DataFrame = {
     val wt = unigramWordTable(spark, sfDir)
     val short = wt.filter(length(col("word")) <= maxLen)
     val scores = unigramTrain(short, rounds, multiCap, maxLen, pieceMax)
@@ -2638,8 +2641,10 @@ object TextOps {
     s"CASE length(word) " +
       (1 to maxLen).map(j => s"WHEN $j THEN b$j").mkString(" ") + " END"
 
-  def unigramLmSql(rounds: Int = 2, multiCap: Int = 200, maxLen: Int = 16,
-      pieceMax: Int = 4): String = {
+  def unigramLmSql(rounds: Int = UnigramDefaults.Rounds,
+      multiCap: Int = UnigramDefaults.MultiCap,
+      maxLen: Int = UnigramDefaults.MaxLen,
+      pieceMax: Int = UnigramDefaults.PieceMax): String = {
     def dpChain(r: Int): String = vitDpChain(r.toString, maxLen, pieceMax)
     val bestCase = vitBestCase(maxLen)
     // round r uses cnt{r} → voc{r}/sc{r}/m{r} → dp{r}/bb{r} → cnt{r+1}
@@ -3000,13 +3005,30 @@ object TextOps {
     * ([[unigramLmSql]] embedded as each consumer's segmentation CTE), so a
     * stale or corrupt stage fails the hash gate loudly. */
   private[operators] def stagedUnigramSeg(spark: SparkSession, sfDir: String,
-      rounds: Int = 2, multiCap: Int = 200, maxLen: Int = 16,
-      pieceMax: Int = 4): DataFrame =
-    Staged.parquet(spark, s"unigram_seg_v1/r${rounds}_mc${multiCap}_" +
-        s"ml${maxLen}_pm$pieceMax/${Staged.dirKey(sfDir)}") {
+      rounds: Int = UnigramDefaults.Rounds,
+      multiCap: Int = UnigramDefaults.MultiCap,
+      maxLen: Int = UnigramDefaults.MaxLen,
+      pieceMax: Int = UnigramDefaults.PieceMax): DataFrame =
+    Staged.parquet(spark, s"${unigramSegKey(rounds, multiCap, maxLen,
+        pieceMax)}/${Staged.dirKey(sfDir)}") {
       unigramLm(spark, sfDir, rounds, multiCap, maxLen, pieceMax)
         .select(col("word"), col("n_pieces"))
     }
+
+  /** [[stagedUnigramSeg]]'s stage key, less the corpus fingerprint. */
+  private[graft] def unigramSegKey(rounds: Int, multiCap: Int, maxLen: Int,
+      pieceMax: Int): String =
+    s"unigram_seg_v1/r${rounds}_mc${multiCap}_ml${maxLen}_pm$pieceMax"
+
+  /** [[unigramLm]]'s training defaults. Its oracle ([[unigramLmSql]]) and
+    * [[stagedUnigramSeg]], whose stage key carries them, take theirs from
+    * here too, so a changed default changes the key. */
+  object UnigramDefaults {
+    val Rounds = 2
+    val MultiCap = 200
+    val MaxLen = 16
+    val PieceMax = 4
+  }
 
   def unigramEncode(spark: SparkSession, sfDir: String): DataFrame = {
     val seg = stagedUnigramSeg(spark, sfDir)

@@ -657,9 +657,12 @@ object Streaming {
         .as("first"))
       .select(col("first.partition"), col("first.offset"), col("uuid"),
         col("first.n_itens"))
+    // explicit schema: no footer-inference job per batch
     val fresh =
       if (!new java.io.File(appliedDir).isDirectory) decoded
-      else decoded.join(spark.read.parquet(appliedDir).select("uuid"),
+      else decoded.join(
+        spark.read.schema("uuid string, n_itens long").parquet(appliedDir)
+          .select("uuid"),
         Seq("uuid"), "left_anti")
     fresh.select("uuid", "n_itens").write.mode("append").parquet(appliedDir)
     ackOffsets(rows, root, topic, group)
@@ -699,19 +702,35 @@ object Streaming {
     * the composite message and build BOTH typed fact grains from it
     * ([[graft.operators.Messages.pedidosFactOf]]/[[graft.operators.Messages.itensFactOf]]
     * — per-row array algebra, no joins), landing each in day-partitioned
-    * parquet. Exactly-once without a dedicated applied-set sink:
+    * parquet. Exactly-once, with writes in the order facts → ledger → ack:
     *  - engine REDELIVERY (crash before checkpoint) re-executes under the
     *    original batchId, and every write goes to an `ingest_batch=<id>`
     *    subdirectory in OVERWRITE mode (the [[fanOutBatch]] idempotence
-    *    pattern), so a re-run leaves the sinks as a single run would;
-    *  - producer RESENDS land in new batches, so fresh rows anti-join on
-    *    msg_uuid against the pedidos sink EXCLUDING this batch's own
-    *    subdirectory (a redelivered batch must not be masked by its own
-    *    partial output), after first collapsing duplicate uuids WITHIN the
-    *    batch (min partition/offset wins — the log consumer's rule). */
+    *    pattern), so a re-run leaves the sinks and the ledger as a single
+    *    run would;
+    *  - producer RESENDS land in later batches. After both fact writes,
+    *    each batch records the uuids it landed in the uuid LEDGER,
+    *    `<pedidosDir>/_applied/ingest_batch=<id>` (one small file), and
+    *    fresh rows anti-join against every ledger entry EXCEPT this batch's
+    *    own (a redelivered batch must not be masked by its own partial
+    *    output). An entry is valid exactly as long as its batch's fact
+    *    output exists, so the anti-join never reads the fact sink itself:
+    *    a batch costs its own size, not the sink's. A crash between
+    *    the fact writes and the ledger write leaves the batch unacked and
+    *    un-checkpointed, and its redelivery rewrites both;
+    *  - duplicate uuids WITHIN the batch collapse first (min
+    *    partition/offset wins — the log consumer's rule).
+    *
+    * Partition discovery skips `_`-prefixed directories, so every
+    * `spark.read.parquet(pedidosDir)` reader sees the fact rows and schema
+    * alone. [[priorLedgerEntries]] runs first: a sink written without a
+    * ledger, or a ledger damaged by hand, fails the batch instead of
+    * letting resends land twice. */
   def factApplyBatch(batch: DataFrame, batchId: Long, pedidosDir: String,
       itensDir: String, root: String, topic: String, group: String): Unit = {
     val spark = batch.sparkSession
+    val ledgerDir = s"$pedidosDir/$LedgerName"
+    val prior = priorLedgerEntries(pedidosDir, ledgerDir, batchId)
     val rows = batch.persist()
     // in-batch resend collapse: uuid extracted WITHOUT the full decode
     val firstPerUuid = rows
@@ -720,14 +739,13 @@ object Streaming {
       .groupBy("uuid")
       .agg(min(struct(col("partition"), col("offset"), col("data"))).as("f"))
       .select(col("uuid"), col("f.data").as("data"))
-    val applied: Option[DataFrame] =
-      if (!new java.io.File(pedidosDir).isDirectory) None
-      else scala.util.Try(
-        spark.read.parquet(pedidosDir)
-          .filter(col("ingest_batch") =!= batchId)
-          .select(col("msg_uuid").as("uuid"))).toOption
-    val fresh = applied.fold(firstPerUuid)(a =>
-      firstPerUuid.join(a, Seq("uuid"), "left_anti"))
+    val fresh =
+      if (prior.isEmpty) firstPerUuid
+      else firstPerUuid.join(
+        // the entries by path: Spark warns on a `_`-named root path
+        spark.read.schema(LedgerSchema).option("basePath", ledgerDir)
+          .parquet(prior: _*).select("uuid"),
+        Seq("uuid"), "left_anti")
     val msg = graft.operators.Messages.decodeForFacts(fresh).persist()
     graft.operators.Messages.pedidosFactFinal(
         graft.operators.Messages.pedidosFactOf(msg))
@@ -739,10 +757,42 @@ object Streaming {
       .withColumn("dia", col("pedido_dia"))
       .write.mode("overwrite").partitionBy("dia")
       .parquet(s"$itensDir/ingest_batch=$batchId")
+    msg.select("uuid").coalesce(1)
+      .write.mode("overwrite").parquet(s"$ledgerDir/ingest_batch=$batchId")
     msg.unpersist()
     ackOffsets(rows, root, topic, group)
     rows.unpersist()
     ()
+  }
+
+  /** [[factApplyBatch]]'s uuid ledger: one directory under the pedidos
+    * sink, one `ingest_batch=<id>` entry per applied batch. */
+  private val LedgerName = "_applied"
+  private val LedgerSchema = "uuid string, ingest_batch long"
+
+  /** Ids of the `ingest_batch=<id>` directories directly under `dir`, by
+    * a driver-side listing (no Spark job). */
+  private def ingestBatches(dir: String): Set[Long] =
+    Option(new java.io.File(dir).list()).toSeq.flatten
+      .collect { case IngestBatchDir(id) => id.toLong }.toSet
+  private val IngestBatchDir = "ingest_batch=([0-9]+)".r
+
+  /** The ledger entries of every batch but `batchId`, once every other
+    * fact batch is known to have one: without its entry the anti-join
+    * would let resends of that batch's messages land twice. The current
+    * batch is exempt, as a crash between its fact writes and its ledger
+    * write recovers through redelivery. */
+  private def priorLedgerEntries(pedidosDir: String, ledgerDir: String,
+      batchId: Long): Seq[String] = {
+    val ledgered = ingestBatches(ledgerDir) - batchId
+    val missing = (ingestBatches(pedidosDir) - batchId -- ledgered).toSeq.sorted
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"fact sink $pedidosDir has no uuid ledger entry in $ledgerDir for " +
+        s"ingest_batch ${missing.mkString(", ")}: resends of those " +
+        "batches' messages would land twice. Replay the log into an empty " +
+        "sink with a new checkpoint.")
+    ledgered.toSeq.sorted.map(b => s"$ledgerDir/ingest_batch=$b")
   }
 
   /** The reference's 3.1 composition under the real engine, second leg:

@@ -2301,6 +2301,25 @@ class OperatorsSpec extends SparkSuite {
     assert(rows.map(_.getDouble(3)).forall(j => j >= 0.0 && j <= 1.0))
   }
 
+  test("doc novelty: a null-text document yields no row, like the oracle's inner join") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("novelty_null").toString
+    Seq((1L, Option("a b c d")), (2L, Option("a b c e")), (3L, Option.empty[String]))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val rows = Dedup.docNovelty(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    // shingles {"a b c", "b c d"} and {"a b c", "b c e"}: one shared each
+    assert(rows == Seq((1L, 2L, 1L, 0.5), (2L, 2L, 1L, 0.5)), rows.toString)
+  }
+
+  test("unigram stage key: derived from unigramLm's defaults, unchanged for today's") {
+    import TextOps.UnigramDefaults._
+    assert(TextOps.unigramSegKey(Rounds, MultiCap, MaxLen, PieceMax) ==
+      "unigram_seg_v1/r2_mc200_ml16_pm4")
+    assert(TextOps.unigramSegKey(Rounds + 1, MultiCap, MaxLen, PieceMax) !=
+      TextOps.unigramSegKey(Rounds, MultiCap, MaxLen, PieceMax))
+  }
+
   test("doc novelty: full driver-side pipeline replay matches, every doc present") {
     val rows = Dedup.docNovelty(spark, sfDir).collect()
     val nDocs = Tables.documents(spark, sfDir).count()

@@ -891,6 +891,120 @@ class StreamingSpec extends SparkSuite {
     }
   }
 
+  test("fact subscriber uuid ledger: mirrors the sink per batch, stays hidden, keeps batch cost flat, guards a damaged ledger") {
+    import graft.streaming.EmbeddedLog
+    import graft.operators.Messages
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = Files.createTempDirectory("graft_ledger").toString
+    val wire = Messages.syntheticMessages(spark, sfDir)
+      .collect().map(_.getString(0))
+    // 6 segments of 45 messages in scattered (hash) order, so every batch
+    // spans more day partitions than Spark's parallel-listing threshold
+    // (32); from the second segment on, each also resends 3 messages of
+    // the segment before it, and the last resends one of the first
+    val picked = wire.sortBy(w => Integer.toHexString(w.hashCode)).take(270)
+    val uuidOf = picked.toSeq.toDF("data")
+      .select(col("data"),
+        get_json_object(unbase64(col("data")).cast("string"), "$.uuid"))
+      .as[(String, String)].collect().toMap
+    val segs = picked.grouped(45).toVector
+    segs.zipWithIndex.foreach { case (g, k) =>
+      val resent = if (k == 0) Nil else segs(k - 1).take(3).toSeq ++
+        (if (k == segs.size - 1) segs.head.take(1).toSeq else Nil)
+      EmbeddedLog.append(root, "pedidos", 0,
+        (g.toSeq ++ resent).zipWithIndex.map { case (w, i) => (s"s${k}_$i", w) })
+    }
+    // the file source orders segments by modification time
+    val segFiles = new java.io.File(s"$root/pedidos/p0").listFiles()
+      .filter(_.isFile).sortBy(_.getName)
+    segFiles.zipWithIndex.foreach { case (f, i) =>
+      f.setLastModified(f.lastModified() - (segFiles.length - i) * 2000L)
+    }
+    val work = Files.createTempDirectory("graft_ledger_out").toString
+    val (pedDir, itDir, ckpt) = (s"$work/pedidos", s"$work/itens", s"$work/ckpt")
+    // Spark jobs per (query, micro-batch), keyed on the engine's local
+    // properties
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+    @volatile var sentinelSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("graft.ledger.sentinel") != null) sentinelSeen = true
+          Option(p.getProperty("streaming.sql.batchId")).foreach(b =>
+            jobs.merge((p.getProperty("sql.streaming.queryId"), b.toLong), 1,
+              (a: Int, c: Int) => a + c))
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val queryId = try {
+      val q = Streaming.factConsume(spark, root, "pedidos", "facts", pedDir,
+        itDir, ckpt, Some(1))
+      q.awaitTermination()
+      // a marked job after the query: once the listener sees it, every
+      // earlier event has been delivered
+      spark.sparkContext.setLocalProperty("graft.ledger.sentinel", "1")
+      try spark.range(1).count()
+      finally spark.sparkContext.setLocalProperty("graft.ledger.sentinel", null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!sentinelSeen && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(sentinelSeen, "listener bus never drained")
+      q.id.toString
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val perBatch = jobs.asScala.collect { case ((id, b), n) if id == queryId => b -> n }
+    val batches = perBatch.keys.toSeq.sorted
+    assert(batches == segs.indices.map(_.toLong), s"batches seen: $batches")
+
+    // (a) per batch, the ledger holds exactly the uuids the sink landed
+    val sinkUuids = spark.read.parquet(pedDir)
+      .select(col("msg_uuid").as("uuid"), col("ingest_batch"))
+    val ledger = spark.read.parquet(s"$pedDir/_applied")
+      .select(col("uuid"), col("ingest_batch"))
+    assert(sinkUuids.exceptAll(ledger).isEmpty && ledger.exceptAll(sinkUuids).isEmpty,
+      "uuid ledger diverges from the pedidos sink")
+    assert(ledger.select("ingest_batch").distinct().count() == segs.size.toLong)
+    // (b) sink readers see the fact columns only, and exactly-once rows
+    val batchPed = Messages.messagePedidosFact(spark, sfDir)
+      .join(uuidOf.values.toSeq.toDF("u"), col("msg_uuid") === col("u"), "left_semi")
+    assert(batchPed.count() > 0)
+    val ped = spark.read.parquet(pedDir)
+    assert(ped.columns.toSeq == batchPed.columns.toSeq ++ Seq("ingest_batch", "dia"),
+      ped.columns.mkString(","))
+    val streamed = ped.drop("ingest_batch", "dia")
+    assert(streamed.count() == batchPed.count() &&
+      streamed.exceptAll(batchPed).isEmpty && batchPed.exceptAll(streamed).isEmpty,
+      "pedidos sink is not the batch build of the streamed messages, exactly once")
+    // (c) a batch reads its predecessors' ledger entries, never the growing
+    // sink: the last batch runs no more jobs than the first to read one
+    assert(perBatch(batches.last) <= perBatch(1L),
+      s"jobs per batch grow with the sink: ${batches.map(b => b -> perBatch(b))}")
+
+    // (d) a lost ledger entry fails the next batch loudly, naming the sink
+    // and the batch
+    val lost = 2L
+    val lostUuids = spark.read.parquet(pedDir).filter(col("ingest_batch") === lost)
+      .select("msg_uuid").as[String].collect().toSet
+    val lostDir = Paths.get(pedDir, "_applied", s"ingest_batch=$lost")
+    Files.walk(lostDir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    val resend = Seq((0, 10000L, "late_redo", picked.head)).toDF("partition", "offset", "key", "data")
+    val e = intercept[IllegalStateException] {
+      Streaming.factApplyBatch(resend, 99L, pedDir, itDir, root, "pedidos", "facts")
+    }
+    assert(e.getMessage.contains(pedDir) && e.getMessage.contains(s"ingest_batch $lost"),
+      e.getMessage)
+    assert(!Files.exists(Paths.get(pedDir, "ingest_batch=99")), "guard ran after a write")
+    // the batch whose entry is missing is exempt: its redelivery rewrites
+    // facts and ledger, after which a resend is absorbed again
+    val redelivered = picked.filter(w => lostUuids(uuidOf(w))).toSeq.zipWithIndex
+      .map { case (w, i) => (0, i.toLong, s"r$i", w) }.toDF("partition", "offset", "key", "data")
+    Streaming.factApplyBatch(redelivered, lost, pedDir, itDir, root, "pedidos", "facts")
+    assert(Files.isDirectory(lostDir))
+    Streaming.factApplyBatch(resend, 99L, pedDir, itDir, root, "pedidos", "facts")
+    val after = spark.read.parquet(pedDir).drop("ingest_batch", "dia")
+    assert(after.count() == batchPed.count() &&
+      after.exceptAll(batchPed).isEmpty && batchPed.exceptAll(after).isEmpty,
+      "redelivery or the later resend broke exactly-once")
+  }
+
   test("embedded log: producer resend landing in the SAME micro-batch as the original is deduped") {
     import graft.streaming.{EmbeddedLog, Streaming}
     import graft.operators.Messages
