@@ -19,9 +19,10 @@ object BackfillDemo {
     // fact builds push malformed discount strings through lenient casts
     // (the reference's try/except float semantics); with Spark 4's ANSI
     // default any value-level evaluation would raise CAST_INVALID_INPUT.
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkEntry.tune(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")

@@ -20,9 +20,10 @@ object RecallGrid {
       k -> vs.split(",").toSeq
     }.toMap
     def vals(k: String, d: String): Seq[String] = grid.getOrElse(k, Seq(d))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

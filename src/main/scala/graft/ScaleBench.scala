@@ -21,9 +21,10 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sf1Dir = args(0)
     val tag = if (args.length > 1) args(1) else "r"
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       // the Bench lesson: weak-ref broadcast cleanup never fires on a big

@@ -33,9 +33,10 @@ object ScaleUp {
     val out = if (args.length > 1) args(1) else "tmpdata/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
     val jitter = args.length > 3 && args(3) == "jitter"
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -22,9 +22,10 @@ object SoakBench {
     val dirB = args(1)
     val tag = args(2)
     val names = args.drop(3).toSeq
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.cleaner.periodicGC.interval", "2min")

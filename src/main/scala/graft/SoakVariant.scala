@@ -34,9 +34,10 @@ object SoakVariant {
     val copies = if (args.length > 2) args(2).toInt else 100
     val groupWidth = if (args.length > 3) args(3).toInt else 10
     val K = 1163962800L
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
@@ -22,8 +24,27 @@ object SparkEntry {
     // Harmless for TIMESTAMP(MICROS) events.ts; required when the data
     // ships as TIMESTAMP(NANOS) — see Tables.events for the dispatch.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    bindLocalFs(spark.sparkContext.hadoopConfiguration)
     spark
   }
+
+  /** Binds `file:` to [[LocalFs]] unless a binding is already set (ours
+    * from an earlier call, or the user's, which wins). Hadoop caches one
+    * `FileSystem` per scheme for the JVM and `close()` is the only way to
+    * drop an entry; a local filesystem holds no client state, so the stock
+    * instance is closed and the cache refilled at once with the new binding,
+    * which every later `FileSystem.get` (driver and local tasks) returns.
+    * Once bound, the cost per call is one conf lookup. */
+  private def bindLocalFs(conf: Configuration): Unit =
+    if (conf.get("fs.file.impl") == null) {
+      conf.set("fs.file.impl", classOf[LocalFs].getName)
+      val root = java.net.URI.create("file:///")
+      val cached = FileSystem.get(root, conf)
+      if (!cached.isInstanceOf[LocalFs]) {
+        cached.close()
+        FileSystem.get(root, conf)
+      }
+    }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

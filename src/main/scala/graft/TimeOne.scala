@@ -12,9 +12,10 @@ object TimeOne {
       else s"/root/testdata/${args(0)}"
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

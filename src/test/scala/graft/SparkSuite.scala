@@ -11,18 +11,17 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSuite {
+  /** Tuned before any spec runs, so every spec sees the engine's session
+    * contract, the `file:` binding included, whatever the order. */
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .appName("graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    s
+    SparkEntry.tune(s)
   }
 }
