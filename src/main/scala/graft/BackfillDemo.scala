@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{FactsFromRaw, RawTables}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -15,19 +14,11 @@ import java.nio.file.Files
 object BackfillDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    // tune() = the engine's session contract — in particular ANSI OFF: the
+    // the session is tuned (SparkEntry.tune) — in particular ANSI OFF: the
     // fact builds push malformed discount strings through lenient casts
     // (the reference's try/except float semantics); with Spark 4's ANSI
     // default any value-level evaluation would raise CAST_INVALID_INPUT.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkEntry.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val work = Files.createTempDirectory("graft-backfill").toString
 
     // --- stage the raw zone from the test tables (same payload shape the

@@ -1,44 +1,9 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 object Bench {
-  /** Locale-pinned fixed-point format: the `f"..%.3f"` interpolator uses
-    * the JVM default locale, which on a comma-decimal locale would emit
-    * `1,234` inside the JSON arrays — invalid JSON. Everything numeric
-    * that lands in the artifact goes through here. */
-  private def fmt(t: Double, decimals: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(t))
-
-  /** Execute the query's REAL plan. A plain `df.count()` wraps the plan in
-    * Aggregate(count(1)) before optimization, so ColumnPruning deletes the
-    * projected expression work and EliminateSorts the final orderBy — a
-    * map-heavy query would be timed as little more than a parquet row count.
-    * `queryExecution.toRdd` runs the physical plan as written (every output
-    * column materialized, sorts included); counting the InternalRows adds
-    * nothing measurable.
-    */
-  private def run(df: DataFrame): Long = df.queryExecution.toRdd.count()
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Long-session hygiene beyond Hygiene.releaseAll (which frees only
-      // checkpoint blocks): broadcast and shuffle state is reclaimed by
-      // the ContextCleaner via WEAK REFERENCES, so with a ~100 GiB heap
-      // the JVM may not GC for the whole run and ~1000 accumulated
-      // broadcasts (160+ queries × 2+ runs) squeeze the block manager —
-      // measured as pagerank_parts 21.6 s mid-bench vs 3.4 s in a short
-      // session, its edge checkpoint spilling under storage pressure.
-      // Spark's own knob is the periodic forced GC; default 30min never
-      // fires inside one bench run.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Warm up whole-stage-codegen + JIT per query on the smallest SF so the
     // timed run measures engine throughput, not first-run compilation (which
     // amortizes to zero at scale). Falls back to the flagship query when no
@@ -52,17 +17,12 @@ object Bench {
     if (warmDir != sfDir && new java.io.File(warmDir).isDirectory)
       SparkEntry.queries.foreach { case (name, fn) =>
         try {
-          run(fn(spark, warmDir))
-          Hygiene.releaseAll(spark, blocking = true)
-          val t0 = System.nanoTime()
-          run(fn(spark, warmDir))
-          warmSec(name) = (System.nanoTime() - t0) / 1e9
+          Harness.time(fn(spark, warmDir))
+          warmSec(name) = Harness.time(fn(spark, warmDir))
         } catch { case _: Throwable => () }
-        finally Hygiene.releaseAll(spark, blocking = true)
       }
     else
-      try run(SparkEntry.entry(spark)) catch { case _: Throwable => () }
-      finally Hygiene.releaseAll(spark)
+      try Harness.time(SparkEntry.entry(spark)) catch { case _: Throwable => () }
     // Each query is timed at least twice and the MIN is reported: a single
     // pass is vulnerable to one-off JIT/codegen-compile stalls under load
     // (observed: a 1 s query recorded at 14 s once), and steady-state
@@ -91,20 +51,12 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val runs = mutable.ArrayBuffer.empty[Double]
       var fails = 0
-      def pass(): Unit = {
-        val t0 = System.nanoTime()
-        try { run(fn(spark, sfDir)); runs += (System.nanoTime() - t0) / 1e9 }
+      def pass(): Unit =
+        try runs += Harness.time(fn(spark, sfDir))
         catch { case e: Throwable =>
           fails += 1
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
-        // Between-run reset (OUTSIDE the timed window, blocking so removal
-        // completes before the next measurement): checkpointing operators
-        // leave their final lineage-cut blocks pinned, and 135 queries × 2
-        // runs of accumulation was measured to inflate later shuffle-hash
-        // queries 10× (triangle_parts 8.5 s fresh vs 103.9 s leaked).
-        Hygiene.releaseAll(spark, blocking = true)
-      }
       pass(); pass()
       def suspicious: Boolean = runs.size >= 2 && {
         val s = runs.sorted
@@ -128,7 +80,7 @@ object Bench {
       }
       while (fails == 0 &&
           ((runs.size < 4 && suspicious) || (runs.size < 6 && stillFalling))) {
-        System.err.println(s"[bench] $name retry ${runs.size + 1}: runs so far ${runs.map(t => fmt(t, 2)).mkString(", ")} s")
+        System.err.println(s"[bench] $name retry ${runs.size + 1}: runs so far ${runs.map(t => Harness.fmt(t, 2)).mkString(", ")} s")
         pass()
       }
       if (runs.isEmpty) failed ::= name
@@ -137,7 +89,7 @@ object Bench {
     }.toMap
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val rs = allRuns.map { case (k, v) => "\"" + k + "\":[" + v.map(t => fmt(t, 3)).mkString(",") + "]" }
+    val rs = allRuns.map { case (k, v) => "\"" + k + "\":[" + v.map(t => Harness.fmt(t, 3)).mkString(",") + "]" }
       .mkString("{", ",", "}")
     def median(v: Seq[Double]): Double = {
       val s = v.sorted
@@ -145,14 +97,14 @@ object Bench {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     val ms = allRuns.map { case (k, v) =>
-      "\"" + k + "\":" + (if (v.isEmpty) "-1.0" else fmt(median(v), 3))
+      "\"" + k + "\":" + (if (v.isEmpty) "-1.0" else Harness.fmt(median(v), 3))
     }.mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
     val medianTotal = allRuns.values.filter(_.nonEmpty).map(median).sum
     // Full record: "medians" precedes "queries" so a human reading a
     // truncated tail still sees the contention-diagnosis map first; the
     // complete line lives in bench_gates/<tag>.json either way.
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","median_total":${fmt(medianTotal, 3)},"medians":$ms,"queries":$qs,"runs":$rs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","median_total":${Harness.fmt(medianTotal, 3)},"medians":$ms,"queries":$qs,"runs":$rs,"sf":"$sfDir"}"""
     // The gate path is resolved BEFORE anything prints so the headline
     // line below can name it. The tag comes from SPARK_GRAFT_BENCH_TAG
     // when set (the way ScaleBench takes its tag) — inferring it from cwd
@@ -204,7 +156,7 @@ object Bench {
     // "parsed": null. This line is < 200 bytes, complete JSON on its own,
     // and points at the gate file holding the full per-query maps.
     val gateRel = gate.map(g => s"bench_gates/${g.getName}").getOrElse("")
-    val headline = s"""{"metric":"total","value":$total,"unit":"sec","median_total":${fmt(medianTotal, 3)},"n":${results.size},"failed":${failed.size},"sf":"$sfDir","gate":"$gateRel"}"""
+    val headline = s"""{"metric":"total","value":$total,"unit":"sec","median_total":${Harness.fmt(medianTotal, 3)},"n":${results.size},"failed":${failed.size},"sf":"$sfDir","gate":"$gateRel"}"""
     println(headline)
     println(line)
     // Persist the COMPLETE line to bench_gates/<tag>.json (the file was

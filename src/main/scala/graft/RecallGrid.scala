@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness: mean serving recall@topk of the anchored graph walk
@@ -20,20 +19,13 @@ object RecallGrid {
       k -> vs.split(",").toSeq
     }.toMap
     def vals(k: String, d: String): Seq[String] = grid.getOrElse(k, Seq(d))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     for {
       k <- vals("k", "5")
       rounds <- vals("rounds", "2")
       nBits <- vals("nBits", "auto")
-      nTables <- vals("nTables", "4")
-      beam <- vals("beam", "48")
+      nTables <- vals("nTables", "8")
+      beam <- vals("beam", "64")
       hops <- vals("hops", "3")
     } {
       val t0 = System.nanoTime()

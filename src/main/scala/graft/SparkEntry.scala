@@ -5,11 +5,11 @@ import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
-/** Driver contract — see SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every key in [[queries]] is an operator from SURVEY.md §2 (or a
-  * BASELINE.json extension); every SQL-expressible one has a DuckDB oracle in
-  * [[oracleSql]] with IDENTICAL column names and row ordering.
+  * [[registry]] declares every query once: an operator from SURVEY.md §2
+  * (or a BASELINE.json extension) and its DuckDB oracle. [[queries]] and
+  * [[oracleSql]] are the public views of it.
   */
 object SparkEntry {
 
@@ -50,524 +50,313 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Facts.itensFact(tune(spark), "/root/testdata/sf0.001")
 
+  /** One declared query: its build function (run on a [[tune]]d session)
+    * and the ANSI SQL DuckDB runs on the same parquet tables as its oracle,
+    * with IDENTICAL column names and row ordering. The oracle is a thunk so
+    * building queries never renders oracle text. */
+  final case class Query(name: String, build: (SparkSession, String) => DataFrame,
+      oracle: () => String)
+
+  private def q(name: String, build: (SparkSession, String) => DataFrame,
+      oracle: => String): Query = Query(name, build, () => oracle)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: List[Query] = List(
     // F. analytical core (sales_to_bq)
-    "itens_fact" -> ((s, dir) => Facts.itensFact(tune(s), dir)),
-    "pedidos_fact" -> ((s, dir) => Facts.pedidosFact(tune(s), dir)),
-    "copurchase_topk" -> ((s, dir) => Facts.copurchaseTopk(tune(s), dir)),
-    "retention_cohorts" -> ((s, dir) => Analytics.retentionCohorts(tune(s), dir)),
-    "pagerank_parts" -> ((s, dir) => Graph.pagerankParts(tune(s), dir)),
-    "triangle_parts" -> ((s, dir) => Graph.triangleParts(tune(s), dir)),
+    q("itens_fact", Facts.itensFact, Facts.itensFactSql),
+    q("pedidos_fact", Facts.pedidosFact, Facts.pedidosFactSql),
+    q("copurchase_topk", Facts.copurchaseTopk(_, _), Facts.copurchaseTopkSql),
+    q("retention_cohorts", Analytics.retentionCohorts, Analytics.retentionCohortsSql),
+    q("pagerank_parts", Graph.pagerankParts(_, _), Graph.pagerankPartsSql),
+    q("triangle_parts", Graph.triangleParts(_, _), Graph.trianglePartsSql),
     // the production scale path: singleton co-purchase (noise) edges
     // pruned before the wedge phase — oracle-checked, not just documented
-    "triangle_parts_t2" -> ((s, dir) => Graph.triangleParts(tune(s), dir, minSupport = 2)),
-    "kcore_parts" -> ((s, dir) => Graph.kcoreParts(tune(s), dir)),
-    "ann_ivf_mp" -> ((s, dir) => Similarity.annIvfMultiprobe(tune(s), dir)),
-    "rfm_segments" -> ((s, dir) => Analytics.rfmSegments(tune(s), dir)),
+    q("triangle_parts_t2", Graph.triangleParts(_, _, minSupport = 2), Graph.trianglePartsThresholdSql(2)),
+    q("kcore_parts", Graph.kcoreParts(_, _), Graph.kcorePartsSql()),
+    q("ann_ivf_mp", Similarity.annIvfMultiprobe(_, _), Similarity.annIvfMultiprobeSql()),
+    q("rfm_segments", Analytics.rfmSegments, Analytics.rfmSegmentsSql),
     // the 100 TB scoring path: broadcast approx-quantile cuts, no ranking
-    "rfm_segments_approx" -> ((s, dir) => Analytics.rfmSegmentsApprox(tune(s), dir)),
-    "abc_parts" -> ((s, dir) => Analytics.abcParts(tune(s), dir)),
-    "revenue_anomaly" -> ((s, dir) => Analytics.revenueAnomaly(tune(s), dir)),
-    "basket_rules" -> ((s, dir) => Analytics.basketRules(tune(s), dir)),
-    "item_neighbors" -> ((s, dir) => Analytics.itemNeighbors(tune(s), dir)),
-    "gap_fill" -> ((s, dir) => Analytics.gapFill(tune(s), dir)),
-    "sales_rollup" -> ((s, dir) => Analytics.salesRollup(tune(s), dir)),
-    "sales_cube" -> ((s, dir) => Analytics.salesCube(tune(s), dir)),
-    "sales_pivot" -> ((s, dir) => Analytics.salesPivot(tune(s), dir)),
-    "rolling_revenue" -> ((s, dir) => Analytics.rollingRevenue(tune(s), dir)),
-    "brand_nation_margin" -> ((s, dir) => Analytics.brandNationMargin(tune(s), dir)),
+    q("rfm_segments_approx", Analytics.rfmSegmentsApprox, Analytics.rfmSegmentsApproxSql),
+    q("abc_parts", Analytics.abcParts, Analytics.abcPartsSql),
+    q("revenue_anomaly", Analytics.revenueAnomaly(_, _), Analytics.revenueAnomalySql),
+    q("basket_rules", Analytics.basketRules(_, _), Analytics.basketRulesSql),
+    q("item_neighbors", Analytics.itemNeighbors(_, _), Analytics.itemNeighborsSql),
+    q("gap_fill", Analytics.gapFill, Analytics.gapFillSql),
+    q("sales_rollup", Analytics.salesRollup, Analytics.salesRollupSql),
+    q("sales_cube", Analytics.salesCube, Analytics.salesCubeSql),
+    q("sales_pivot", Analytics.salesPivot, Analytics.salesPivotSql),
+    q("rolling_revenue", Analytics.rollingRevenue, Analytics.rollingRevenueSql),
+    q("brand_nation_margin", Analytics.brandNationMargin, Analytics.brandNationMarginSql),
     // E/G/C/F11. quality + reconciliation (data_validation, backfill)
-    "ids_distinct" -> ((s, dir) => Quality.idsDistinct(tune(s), dir)),
-    "recon_sets" -> ((s, dir) => Quality.reconSets(tune(s), dir)),
-    "set_equality" -> ((s, dir) => Quality.setEquality(tune(s), dir)),
-    "dup_resolution" -> ((s, dir) => Quality.dupResolution(tune(s), dir)),
-    "anti_join_dedupe" -> ((s, dir) => Quality.antiJoinDedupe(tune(s), dir)),
-    "file_groups" -> ((s, dir) => Quality.fileGroups(tune(s), dir)),
-    "count_verify" -> ((s, dir) => Quality.countVerify(tune(s), dir)),
+    q("ids_distinct", Quality.idsDistinct, Quality.idsDistinctSql),
+    q("recon_sets", Quality.reconSets, Quality.reconSetsSql),
+    q("set_equality", Quality.setEquality, Quality.setEqualitySql),
+    q("dup_resolution", Quality.dupResolution, Quality.dupResolutionSql),
+    q("anti_join_dedupe", Quality.antiJoinDedupe, Quality.antiJoinDedupeSql),
+    q("file_groups", Quality.fileGroups, Quality.fileGroupsSql),
+    q("count_verify", Quality.countVerify, Quality.countVerifySql),
     // Declarative multi-rule DQ report: one conditional aggregate + one
     // referential anti-join for any number of column rules
-    "dq_expectations" -> ((s, dir) => Quality.dqExpectations(tune(s), dir)),
+    q("dq_expectations", Quality.dqExpectations, Quality.dqExpectationsSql),
     // quasi-identifier privacy gate: generalize-then-suppress ladder
-    "k_anonymity" -> ((s, dir) => Quality.kAnonymity(tune(s), dir)),
+    q("k_anonymity", Quality.kAnonymity(_, _), Quality.kAnonymitySql()),
     // ε-DP Laplace count release (deterministic inverse-CDF draw)
-    "dp_noisy_counts" -> ((s, dir) => Quality.dpNoisyCounts(tune(s), dir)),
-    "folder_completeness" -> ((s, dir) => Quality.folderCompleteness(tune(s), dir)),
-    "table_profile" -> ((s, dir) => Quality.tableProfile(tune(s), dir)),
+    q("dp_noisy_counts", Quality.dpNoisyCounts(_, _), Quality.dpNoisyCountsSql()),
+    q("folder_completeness", Quality.folderCompleteness, Quality.folderCompletenessSql),
+    q("table_profile", Quality.tableProfile, Quality.tableProfileSql),
     // B/D. raw-zone load transforms (gcs_to_bq, webhook_handler)
-    "raw_unwrap" -> ((s, dir) => RawLoad.rawUnwrap(tune(s), dir)),
-    "raw_explode" -> ((s, dir) => RawLoad.rawExplode(tune(s), dir)),
-    "br_dates" -> ((s, dir) => RawLoad.brDates(tune(s), dir)),
-    "filename_keys" -> ((s, dir) => RawLoad.filenameKeys(tune(s), dir)),
-    "categoria" -> ((s, dir) => RawLoad.categoria(tune(s), dir)),
-    "validate_route" -> ((s, dir) => RawLoad.validateRoute(tune(s), dir)),
+    q("raw_unwrap", RawLoad.rawUnwrap, RawLoad.rawUnwrapSql),
+    q("raw_explode", RawLoad.rawExplode, RawLoad.rawExplodeSql),
+    q("br_dates", RawLoad.brDates, RawLoad.brDatesSql),
+    q("filename_keys", RawLoad.filenameKeys, RawLoad.filenameKeysSql),
+    q("categoria", RawLoad.categoria, RawLoad.categoriaSql),
+    q("validate_route", RawLoad.validateRoute, RawLoad.validateRouteSql),
     // A4/E1/J5 + C1-C3. dimension path + enrichment joins
-    "contatos_dim" -> ((s, dir) => Dimensions.contatosDim(tune(s), dir)),
-    "enrich_join" -> ((s, dir) => Dimensions.enrichJoin(tune(s), dir)),
-    "first_match" -> ((s, dir) => Dimensions.firstMatch(tune(s), dir)),
+    q("contatos_dim", Dimensions.contatosDim, Dimensions.contatosDimSql),
+    q("enrich_join", Dimensions.enrichJoin, Dimensions.enrichJoinSql),
+    q("first_match", Dimensions.firstMatch, Dimensions.firstMatchSql),
     // I. event-stream analytics (batch form of the streaming path)
-    "events_window" -> ((s, dir) => EventsOps.eventsWindow(tune(s), dir)),
-    "events_session" -> ((s, dir) => EventsOps.eventsSession(tune(s), dir)),
-    "events_dedupe" -> ((s, dir) => EventsOps.eventsDedupe(tune(s), dir)),
-    "events_props" -> ((s, dir) => EventsOps.eventsProps(tune(s), dir)),
-    "events_funnel" -> ((s, dir) => EventsOps.eventsFunnel(tune(s), dir)),
+    q("events_window", EventsOps.eventsWindow, EventsOps.eventsWindowSql),
+    q("events_session", EventsOps.eventsSession, EventsOps.eventsSessionSql),
+    q("events_dedupe", EventsOps.eventsDedupe, EventsOps.eventsDedupeSql),
+    q("events_props", EventsOps.eventsProps, EventsOps.eventsPropsSql),
+    q("events_funnel", EventsOps.eventsFunnel(_, _), EventsOps.eventsFunnelSql),
     // conversion-latency quantiles per funnel step pair (exact, 2-pass)
-    "funnel_latency" -> ((s, dir) => EventsOps.funnelLatency(tune(s), dir)),
+    q("funnel_latency", EventsOps.funnelLatency(_, _), EventsOps.funnelLatencySql()),
     // watermark tuning: drop fraction per candidate delay, ranged running max
-    "watermark_sweep" -> ((s, dir) => EventsOps.watermarkSweep(tune(s), dir)),
-    "events_hopping" -> ((s, dir) => EventsOps.eventsHopping(tune(s), dir)),
-    "journey_topk" -> ((s, dir) => EventsOps.journeyTopk(tune(s), dir)),
+    q("watermark_sweep", EventsOps.watermarkSweep(_, _), EventsOps.watermarkSweepSql()),
+    q("events_hopping", EventsOps.eventsHopping, EventsOps.eventsHoppingSql),
+    q("journey_topk", EventsOps.journeyTopk(_, _), EventsOps.journeyTopkSql()),
     // Extension: text analysis over documents
-    "text_stats" -> ((s, dir) => TextOps.textStats(tune(s), dir)),
-    "lang_id" -> ((s, dir) => TextOps.langId(tune(s), dir)),
-    "token_count" -> ((s, dir) => TextOps.tokenCount(tune(s), dir)),
-    "token_fertility" -> ((s, dir) => TextOps.tokenFertility(tune(s), dir)),
-    "char_coverage" -> ((s, dir) => TextOps.charCoverage(tune(s), dir)),
-    "lang_confusion" -> ((s, dir) => TextOps.langConfusion(tune(s), dir)),
+    q("text_stats", TextOps.textStats, TextOps.textStatsSql),
+    q("lang_id", TextOps.langId, TextOps.langIdSql),
+    q("token_count", TextOps.tokenCount, TextOps.tokenCountSql),
+    q("token_fertility", TextOps.tokenFertility, TextOps.tokenFertilitySql),
+    q("char_coverage", TextOps.charCoverage(_, _), TextOps.charCoverageSql()),
+    q("lang_confusion", TextOps.langConfusion, TextOps.langConfusionSql),
     // trained multinomial NB classifier: train on even ids, held-out confusion
-    "nb_lang_confusion" -> ((s, dir) => TextOps.nbLangConfusion(tune(s), dir)),
-    "fingerprint" -> ((s, dir) => TextOps.fingerprint(tune(s), dir)),
+    q("nb_lang_confusion", TextOps.nbLangConfusion, TextOps.nbLangConfusionSql()),
+    q("fingerprint", TextOps.fingerprint, TextOps.fingerprintSql),
     // Extension: deduplication
-    "dedup_exact" -> ((s, dir) => Dedup.dedupExact(tune(s), dir)),
-    "dedup_minhash" -> ((s, dir) => Dedup.dedupMinhash(tune(s), dir)),
-    "dedup_jaccard" -> ((s, dir) => Dedup.dedupJaccard(tune(s), dir)),
-    "dedup_minhash_eval" -> ((s, dir) => Dedup.dedupMinhashEval(tune(s), dir)),
-    "dedup_simhash" -> ((s, dir) => Dedup.dedupSimhash(tune(s), dir)),
-    "dedup_embedding" -> ((s, dir) => Dedup.dedupEmbedding(tune(s), dir)),
-    "dedup_embedding_lsh" -> ((s, dir) => Dedup.dedupEmbeddingLsh(tune(s), dir)),
-    "dedup_embedding_lsh12" -> ((s, dir) => Dedup.dedupEmbeddingLsh(tune(s), dir, nBits = 12)),
-    "dedup_embedding_lsh_auto" -> ((s, dir) => Dedup.dedupEmbeddingLshAuto(tune(s), dir)),
-    "image_dedup_incr" -> ((s, dir) => Multimodal.imageDedupIncremental(tune(s), dir)),
-    "audio_dedup_incr" -> ((s, dir) => Multimodal.audioDedupIncremental(tune(s), dir)),
-    "video_dedup_incr" -> ((s, dir) => Multimodal.videoDedupIncremental(tune(s), dir)),
-    "image_dedup_incr_eval" -> ((s, dir) => Multimodal.imageDedupIncrEval(tune(s), dir)),
-    "audio_dedup_incr_eval" -> ((s, dir) => Multimodal.audioDedupIncrEval(tune(s), dir)),
-    "video_dedup_incr_eval" -> ((s, dir) => Multimodal.videoDedupIncrEval(tune(s), dir)),
+    q("dedup_exact", Dedup.dedupExact, Dedup.dedupExactSql),
+    q("dedup_minhash", Dedup.dedupMinhash, Dedup.dedupMinhashSql),
+    q("dedup_jaccard", Dedup.dedupJaccard, Dedup.dedupJaccardSql),
+    q("dedup_minhash_eval", Dedup.dedupMinhashEval(_, _), Dedup.dedupMinhashEvalSql),
+    q("dedup_simhash", Dedup.dedupSimhash, Dedup.dedupSimhashSql),
+    q("dedup_embedding", Dedup.dedupEmbedding, Dedup.dedupEmbeddingSql),
+    q("dedup_embedding_lsh", Dedup.dedupEmbeddingLsh(_, _), Dedup.dedupEmbeddingLshSql(8)),
+    q("dedup_embedding_lsh12", Dedup.dedupEmbeddingLsh(_, _, nBits = 12), Dedup.dedupEmbeddingLshSql(12)),
+    q("dedup_embedding_lsh_auto", Dedup.dedupEmbeddingLshAuto, Dedup.dedupEmbeddingLshAutoSql),
+    q("image_dedup_incr", Multimodal.imageDedupIncremental(_, _), Multimodal.imageDedupIncrementalSql),
+    q("audio_dedup_incr", Multimodal.audioDedupIncremental(_, _), Multimodal.audioDedupIncrementalSql),
+    q("video_dedup_incr", Multimodal.videoDedupIncremental(_, _), Multimodal.videoDedupIncrementalSql),
+    q("image_dedup_incr_eval", Multimodal.imageDedupIncrEval, Multimodal.imageDedupIncrEvalSql),
+    q("audio_dedup_incr_eval", Multimodal.audioDedupIncrEval, Multimodal.audioDedupIncrEvalSql),
+    q("video_dedup_incr_eval", Multimodal.videoDedupIncrEval, Multimodal.videoDedupIncrEvalSql),
     // SemDeDup: learned k-means cells as the blocking key, greedy keep-rule
-    "dedup_semantic" -> ((s, dir) => Dedup.dedupSemantic(tune(s), dir)),
+    q("dedup_semantic", Dedup.dedupSemantic(_, _), Dedup.dedupSemanticSql()),
     // embedding-level benchmark decontamination: eval-vs-train LSH join
-    "semantic_decontaminate" -> ((s, dir) => Dedup.semanticDecontaminate(tune(s), dir)),
-    "dedup_components" -> ((s, dir) => Dedup.dedupComponents(tune(s), dir)),
+    q("semantic_decontaminate", Dedup.semanticDecontaminate(_, _), Dedup.semanticDecontaminateSql()),
+    q("dedup_components", Dedup.dedupComponents(_, _), Dedup.dedupComponentsSql),
     // cluster-size distribution: the dedup-policy shape statistic
-    "dup_cluster_sizes" -> ((s, dir) => Dedup.dupClusterSizes(tune(s), dir)),
-    "dedup_canonical" -> ((s, dir) => Dedup.dedupCanonical(tune(s), dir)),
-    "substring_dup_spans" -> ((s, dir) => Dedup.substringDupSpans(tune(s), dir)),
+    q("dup_cluster_sizes", Dedup.dupClusterSizes, Dedup.dupClusterSizesSql),
+    q("dedup_canonical", Dedup.dedupCanonical, Dedup.dedupCanonicalSql),
+    q("substring_dup_spans", Dedup.substringDupSpans(_, _), Dedup.substringDupSpansSql),
     // the rewrite step: cut every duplicated-window position, reassemble
-    "substring_excise" -> ((s, dir) => Dedup.substringExcise(tune(s), dir)),
-    "dedup_incremental" -> ((s, dir) => Dedup.dedupIncremental(tune(s), dir)),
-    "dedup_prefix_join" -> ((s, dir) => Dedup.dedupPrefixJoin(tune(s), dir)),
-    "dup_score_hist" -> ((s, dir) => Dedup.dupScoreHist(tune(s), dir)),
-    "dup_cross_source" -> ((s, dir) => Dedup.dupCrossSource(tune(s), dir)),
-    "source_overlap" -> ((s, dir) => Dedup.sourceOverlap(tune(s), dir)),
-    "doc_novelty" -> ((s, dir) => Dedup.docNovelty(tune(s), dir)),
-    "contamination_check" -> ((s, dir) => Dedup.contaminationCheck(tune(s), dir)),
-    "corpus_sample" -> ((s, dir) => Sampling.corpusSample(tune(s), dir)),
-    "mix_temperature" -> ((s, dir) => Sampling.mixTemperature(tune(s), dir)),
-    "domain_mix" -> ((s, dir) => Sampling.domainMix(tune(s), dir)),
-    "corpus_remix" -> ((s, dir) => Sampling.corpusRemix(tune(s), dir)),
-    "vocab_topk" -> ((s, dir) => TextOps.vocabTopk(tune(s), dir)),
-    "tfidf_topk" -> ((s, dir) => TextOps.tfidfTopk(tune(s), dir)),
-    "inverted_index" -> ((s, dir) => TextOps.invertedIndex(tune(s), dir)),
-    "bigram_lm" -> ((s, dir) => TextOps.bigramLm(tune(s), dir)),
+    q("substring_excise", Dedup.substringExcise(_, _), Dedup.substringExciseSql),
+    q("dedup_incremental", Dedup.dedupIncremental(_, _), Dedup.dedupIncrementalSql),
+    q("dedup_prefix_join", Dedup.dedupPrefixJoin(_, _), Dedup.dedupPrefixJoinSql),
+    q("dup_score_hist", Dedup.dupScoreHist, Dedup.dupScoreHistSql),
+    q("dup_cross_source", Dedup.dupCrossSource, Dedup.dupCrossSourceSql),
+    q("source_overlap", Dedup.sourceOverlap, Dedup.sourceOverlapSql),
+    q("doc_novelty", Dedup.docNovelty, Dedup.docNoveltySql),
+    q("contamination_check", Dedup.contaminationCheck(_, _), Dedup.contaminationCheckSql),
+    q("corpus_sample", Sampling.corpusSample(_, _), Sampling.corpusSampleSql),
+    q("mix_temperature", Sampling.mixTemperature(_, _), Sampling.mixTemperatureSql),
+    q("domain_mix", Sampling.domainMix(_, _), Sampling.domainMixSql()),
+    q("corpus_remix", Sampling.corpusRemix(_, _), Sampling.corpusRemixSql()),
+    q("vocab_topk", TextOps.vocabTopk, TextOps.vocabTopkSql),
+    q("tfidf_topk", TextOps.tfidfTopk(_, _), TextOps.tfidfTopkSql),
+    q("inverted_index", TextOps.invertedIndex(_, _), TextOps.invertedIndexSql()),
+    q("bigram_lm", TextOps.bigramLm(_, _), TextOps.bigramLmSql()),
     // interpolated Kneser–Ney smoothing over the same bigram table
-    "bigram_kn" -> ((s, dir) => TextOps.bigramKn(tune(s), dir)),
-    "doc_lm_score" -> ((s, dir) => TextOps.docLmScore(tune(s), dir)),
-    "doc_lm_score_kn" -> ((s, dir) => TextOps.docLmScoreKn(tune(s), dir)),
-    "vocab_drift" -> ((s, dir) => TextOps.vocabDrift(tune(s), dir)),
+    q("bigram_kn", TextOps.bigramKn(_, _), TextOps.bigramKnSql()),
+    q("doc_lm_score", TextOps.docLmScore, TextOps.docLmScoreSql),
+    q("doc_lm_score_kn", TextOps.docLmScoreKn, TextOps.docLmScoreKnSql),
+    q("vocab_drift", TextOps.vocabDrift(_, _), TextOps.vocabDriftSql()),
     // Moore–Lewis cross-entropy selection: in-domain vs general LM ratio
-    "moore_lewis" -> ((s, dir) => TextOps.mooreLewis(tune(s), dir)),
-    "bm25_topk" -> ((s, dir) => TextOps.bm25Topk(tune(s), dir)),
-    "bm25_topk_pruned" -> ((s, dir) => TextOps.bm25TopkPruned(tune(s), dir)),
-    "bm25_index_build" -> ((s, dir) => TextOps.bm25IndexBuild(tune(s), dir)),
-    "bm25_topk_indexed" -> ((s, dir) => TextOps.bm25TopkIndexed(tune(s), dir)),
-    "bm25_index_merge" -> ((s, dir) => TextOps.bm25IndexMerge(tune(s), dir)),
-    "bm25_index_apply" -> ((s, dir) => TextOps.bm25IndexApply(tune(s), dir)),
-    "bm25_index_drift" -> ((s, dir) => TextOps.bm25IndexDrift(tune(s), dir)),
-    "bm25_index_compact" -> ((s, dir) => TextOps.bm25IndexCompact(tune(s), dir)),
-    "bm25_auto_compact" -> ((s, dir) => TextOps.bm25AutoCompactQuery(tune(s), dir)),
+    q("moore_lewis", TextOps.mooreLewis(_, _), TextOps.mooreLewisSql()),
+    q("bm25_topk", TextOps.bm25Topk(_, _), TextOps.bm25TopkSql()),
+    q("bm25_topk_pruned", TextOps.bm25TopkPruned(_, _), TextOps.bm25TopkPrunedSql()),
+    q("bm25_index_build", TextOps.bm25IndexBuild(_, _), TextOps.bm25IndexBuildSql()),
+    // the indexed query path answers EXACTLY the pruned form's question —
+    // one oracle text, two plans (recompute vs read-the-staged-prefix)
+    q("bm25_topk_indexed", TextOps.bm25TopkIndexed(_, _), TextOps.bm25TopkPrunedSql()),
+    q("bm25_index_merge", TextOps.bm25IndexMerge(_, _), TextOps.bm25IndexMergeSql()),
+    q("bm25_index_apply", TextOps.bm25IndexApply(_, _), TextOps.bm25IndexApplySql()),
+    q("bm25_index_drift", TextOps.bm25IndexDrift(_, _), TextOps.bm25IndexDriftSql()),
+    // compaction ≡ rebuild over the same corpus — one oracle text checks
+    // both plans (the bm25_topk_indexed precedent)
+    q("bm25_index_compact", TextOps.bm25IndexCompact(_, _), TextOps.bm25IndexBuildSql()),
+    // the policy query: drift mean, tau comparison, and BOTH serve
+    // branches replayed — the DECISION is oracle-checked, not just content
+    q("bm25_auto_compact", TextOps.bm25AutoCompactQuery(_, _), TextOps.bm25AutoCompactSql()),
     // PMI collocation extraction over the shared bigram table
-    "pmi_collocations" -> ((s, dir) => TextOps.pmiCollocations(tune(s), dir)),
-    "bpe_pairs" -> ((s, dir) => TextOps.bpePairs(tune(s), dir)),
+    q("pmi_collocations", TextOps.pmiCollocations(_, _), TextOps.pmiCollocationsSql()),
+    q("bpe_pairs", TextOps.bpePairs(_, _), TextOps.bpePairsSql()),
     // greedy merge training unrolled: vocab-sized rounds, 1-row picks
-    "bpe_merges" -> ((s, dir) => TextOps.bpeMerges(tune(s), dir)),
+    q("bpe_merges", TextOps.bpeMerges(_, _), TextOps.bpeMergesSql()),
     // trained-tokenizer application: per-doc token budget + fertility
-    "bpe_encode" -> ((s, dir) => TextOps.bpeEncode(tune(s), dir)),
+    q("bpe_encode", TextOps.bpeEncode(_, _), TextOps.bpeEncodeSql()),
     // the exactly-once incremental cube, replayed in batch with one epoch
     // deliberately re-delivered — must equal the direct aggregate
-    "rollup_replay" -> ((s, dir) => streaming.Streaming.rollupReplay(tune(s), dir)),
-    "hh_replay" -> ((s, dir) => streaming.Streaming.hhReplay(tune(s), dir)),
-    "bloom_replay" -> ((s, dir) => streaming.Streaming.bloomReplay(tune(s), dir)),
-    "funnel_replay" -> ((s, dir) => streaming.Streaming.funnelReplay(tune(s), dir)),
+    q("rollup_replay", streaming.Streaming.rollupReplay(_, _), streaming.Streaming.rollupReplaySql),
+    q("hh_replay", streaming.Streaming.hhReplay(_, _), streaming.Streaming.hhReplaySql()),
+    q("bloom_replay", streaming.Streaming.bloomReplay(_, _), streaming.Streaming.bloomReplaySql),
+    q("funnel_replay", streaming.Streaming.funnelReplay(_, _), EventsOps.eventsFunnelSql),
     // Extension: similarity search
-    "ann_topk" -> ((s, dir) => Similarity.annTopk(tune(s), dir)),
-    "ann_topk_agg" -> ((s, dir) => Similarity.annTopkAgg(tune(s), dir)),
-    "ann_ivf" -> ((s, dir) => Similarity.annIvf(tune(s), dir)),
-    "ann_ivf_trained" -> ((s, dir) => Similarity.annIvfTrained(tune(s), dir)),
-    "ann_quantized" -> ((s, dir) => Similarity.annQuantized(tune(s), dir)),
-    "ann_pq" -> ((s, dir) => Similarity.annPq(tune(s), dir)),
+    q("ann_topk", Similarity.annTopk, Similarity.annTopkSql),
+    q("ann_topk_agg", Similarity.annTopkAgg, Similarity.annTopkSql), // same contract as ann_topk
+    q("ann_ivf", Similarity.annIvf, Similarity.annIvfSql),
+    q("ann_ivf_trained", Similarity.annIvfTrained, Similarity.annIvfTrainedSql),
+    q("ann_quantized", Similarity.annQuantized, Similarity.annQuantizedSql),
+    q("ann_pq", Similarity.annPq(_, _), Similarity.annPqSql()),
     // the production FAISS shape: coarse cell route × PQ code scan × rerank
-    "ann_ivfpq" -> ((s, dir) => Similarity.annIvfPq(tune(s), dir)),
-    "rrf_fusion" -> ((s, dir) => Similarity.hybridRrf(tune(s), dir)),
-    "ann_recall" -> ((s, dir) => Similarity.annRecall(tune(s), dir)),
+    q("ann_ivfpq", Similarity.annIvfPq(_, _), Similarity.annIvfPqSql()),
+    q("rrf_fusion", Similarity.hybridRrf(_, _), Similarity.hybridRrfSql()),
+    q("ann_recall", Similarity.annRecall, Similarity.annRecallSql),
     // Extension: multimodal column plumbing (decode stubbed)
-    "multimodal_features" -> ((s, dir) => Multimodal.multimodalFeatures(tune(s), dir)),
-    "media_frames" -> ((s, dir) => Multimodal.mediaFrames(tune(s), dir)),
-    "multimodal_decode" -> ((s, dir) => Multimodal.multimodalDecode(tune(s), dir)),
-    "multimodal_audio" -> ((s, dir) => Multimodal.multimodalAudio(tune(s), dir)),
-    "image_dedup" -> ((s, dir) => Multimodal.imageDedup(tune(s), dir)),
-    "audio_dedup" -> ((s, dir) => Multimodal.audioDedup(tune(s), dir)),
-    "video_dedup" -> ((s, dir) => Multimodal.videoDedup(tune(s), dir)),
-    "image_dedup_eval" -> ((s, dir) => Multimodal.imageDedupEval(tune(s), dir)),
-    "audio_dedup_eval" -> ((s, dir) => Multimodal.audioDedupEval(tune(s), dir)),
-    "video_dedup_eval" -> ((s, dir) => Multimodal.videoDedupEval(tune(s), dir)),
-    "sft_render" -> ((s, dir) => CorpusOps.sftRender(tune(s), dir)),
-    "dpo_pairs" -> ((s, dir) => CorpusOps.dpoPairs(tune(s), dir)),
-    "sft_pack" -> ((s, dir) => CorpusOps.sftPack(tune(s), dir)),
-    "pack_stats" -> ((s, dir) => CorpusOps.packStats(tune(s), dir)),
-    "sft_pack_tokens" -> ((s, dir) => CorpusOps.sftPackTokens(tune(s), dir)),
-    "sft_pipeline" -> ((s, dir) => CorpusOps.sftPipeline(tune(s), dir)),
-    "sft_pipeline_tokens" -> ((s, dir) => CorpusOps.sftPipelineTokens(tune(s), dir)),
-    "token_pack" -> ((s, dir) => CorpusOps.tokenPack(tune(s), dir)),
-    "lr_quality" -> ((s, dir) => CorpusOps.lrQuality(tune(s), dir)),
-    "unigram_lm" -> ((s, dir) => TextOps.unigramLm(tune(s), dir)),
-    "unigram_soft" -> ((s, dir) => TextOps.unigramSoft(tune(s), dir)),
-    "multimodal_video" -> ((s, dir) => Multimodal.multimodalVideo(tune(s), dir)),
-    "unigram_encode" -> ((s, dir) => TextOps.unigramEncode(tune(s), dir)),
-    "ann_ivfpq_res" -> ((s, dir) => Similarity.annIvfPqRes(tune(s), dir)),
-    "ann_nndescent" -> ((s, dir) => Similarity.annNndescent(tune(s), dir)),
-    "ann_graph_build" -> ((s, dir) => Similarity.annGraphBuild(tune(s), dir)),
-    "ann_pq_build" -> ((s, dir) => Similarity.annPqBuild(tune(s), dir)),
-    "ann_graph_search" -> ((s, dir) => Similarity.annGraphSearch(tune(s), dir)),
-    "ann_graph_oos" -> ((s, dir) => Similarity.annGraphSearchOos(tune(s), dir)),
-    "ann_graph_recall" -> ((s, dir) => Similarity.annGraphRecall(tune(s), dir)),
-    "ann_graph_anchor" -> ((s, dir) => Similarity.annGraphAnchor(tune(s), dir)),
-    "ann_graph_insert" -> ((s, dir) => Similarity.annGraphInsert(tune(s), dir)),
-    "ann_graph_apply" -> ((s, dir) => Similarity.annGraphApply(tune(s), dir)),
-    "ann_graph_drift" -> ((s, dir) => Similarity.annGraphDrift(tune(s), dir)),
-    "ann_graph_compact" -> ((s, dir) => Similarity.annGraphCompact(tune(s), dir)),
-    "ann_graph_auto_compact" -> ((s, dir) => Similarity.annGraphAutoCompactQuery(tune(s), dir)),
-    "dsir_weights" -> ((s, dir) => TextOps.dsirWeights(tune(s), dir)),
-    "ppl_buckets" -> ((s, dir) => TextOps.pplBuckets(tune(s), dir)),
-    "wordpiece_encode" -> ((s, dir) => TextOps.wordpieceEncode(tune(s), dir)),
-    "cms_counts" -> ((s, dir) => Sketches.cmsCounts(tune(s), dir)),
+    q("multimodal_features", Multimodal.multimodalFeatures, Multimodal.multimodalFeaturesSql),
+    q("media_frames", Multimodal.mediaFrames(_, _), Multimodal.mediaFramesSql),
+    q("multimodal_decode", Multimodal.multimodalDecode, Multimodal.multimodalDecodeSql),
+    q("multimodal_audio", Multimodal.multimodalAudio, Multimodal.multimodalAudioSql),
+    q("image_dedup", Multimodal.imageDedup(_, _), Multimodal.imageDedupSql),
+    q("audio_dedup", Multimodal.audioDedup(_, _), Multimodal.audioDedupSql),
+    q("video_dedup", Multimodal.videoDedup(_, _), Multimodal.videoDedupSql),
+    q("image_dedup_eval", Multimodal.imageDedupEval, Multimodal.imageDedupEvalSql),
+    q("audio_dedup_eval", Multimodal.audioDedupEval, Multimodal.audioDedupEvalSql),
+    q("video_dedup_eval", Multimodal.videoDedupEval, Multimodal.videoDedupEvalSql),
+    q("sft_render", CorpusOps.sftRender, CorpusOps.sftRenderSql),
+    q("dpo_pairs", CorpusOps.dpoPairs, CorpusOps.dpoPairsSql),
+    q("sft_pack", CorpusOps.sftPack(_, _), CorpusOps.sftPackSql()),
+    q("pack_stats", CorpusOps.packStats(_, _), CorpusOps.packStatsSql()),
+    q("sft_pack_tokens", CorpusOps.sftPackTokens(_, _), CorpusOps.sftPackTokensSql()),
+    q("sft_pipeline", CorpusOps.sftPipeline(_, _), CorpusOps.sftPipelineSql()),
+    q("sft_pipeline_tokens", CorpusOps.sftPipelineTokens(_, _), CorpusOps.sftPipelineTokensSql()),
+    q("token_pack", CorpusOps.tokenPack(_, _), CorpusOps.tokenPackSql()),
+    q("lr_quality", CorpusOps.lrQuality, CorpusOps.lrQualitySql()),
+    q("unigram_lm", TextOps.unigramLm(_, _), TextOps.unigramLmSql()),
+    q("unigram_soft", TextOps.unigramSoft(_, _), TextOps.unigramSoftSql()),
+    q("multimodal_video", Multimodal.multimodalVideo, Multimodal.multimodalVideoSql),
+    q("unigram_encode", TextOps.unigramEncode, TextOps.unigramEncodeSql()),
+    q("ann_ivfpq_res", Similarity.annIvfPqRes(_, _), Similarity.annIvfPqResSql()),
+    q("ann_nndescent", Similarity.annNndescent(_, _), Similarity.annNndescentSql()),
+    q("ann_graph_build", Similarity.annGraphBuild(_, _), Similarity.annGraphBuildSql()),
+    q("ann_pq_build", Similarity.annPqBuild(_, _), Similarity.annPqBuildSql()),
+    q("ann_graph_search", Similarity.annGraphSearch(_, _), Similarity.annGraphSearchSql()),
+    q("ann_graph_oos", Similarity.annGraphSearchOos(_, _), Similarity.annGraphSearchOosSql()),
+    q("ann_graph_recall", Similarity.annGraphRecall(_, _), Similarity.annGraphRecallSql()),
+    q("ann_graph_anchor", Similarity.annGraphAnchor(_, _), Similarity.annGraphAnchorSql()),
+    q("ann_graph_insert", Similarity.annGraphInsert(_, _), Similarity.annGraphInsertSql()),
+    q("ann_graph_apply", Similarity.annGraphApply(_, _), Similarity.annGraphApplySql()),
+    q("ann_graph_drift", Similarity.annGraphDrift(_, _), Similarity.annGraphDriftSql()),
+    // compaction ≡ the full-corpus descent — one oracle text, two plans
+    q("ann_graph_compact", Similarity.annGraphCompact(_, _), Similarity.annNndescentSql()),
+    q("ann_graph_auto_compact", Similarity.annGraphAutoCompactQuery(_, _), Similarity.annGraphAutoCompactSql()),
+    q("dsir_weights", TextOps.dsirWeights(_, _), TextOps.dsirWeightsSql()),
+    q("ppl_buckets", TextOps.pplBuckets, TextOps.pplBucketsSql),
+    q("wordpiece_encode", TextOps.wordpieceEncode(_, _), TextOps.wordpieceEncodeSql()),
+    q("cms_counts", Sketches.cmsCounts(_, _), Sketches.cmsCountsSql()),
     // K/D12: custom Catalyst expression via SparkSessionExtensions
-    "checksum_sorted" -> ((s, dir) => Checksums.checksumSorted(tune(s), dir)),
+    q("checksum_sorted", Checksums.checksumSorted, Checksums.checksumSortedSql),
     // §1.1-2 typed-nested path: fixture-shaped JSON through RawTables + FactsFromRaw
-    "typed_itens_fact" -> ((s, dir) => Typed.typedItensFact(tune(s), dir)),
-    "typed_pedidos_fact" -> ((s, dir) => Typed.typedPedidosFact(tune(s), dir)),
-    "typed_pesquisa" -> ((s, dir) => Typed.typedPesquisa(tune(s), dir)),
+    q("typed_itens_fact", Typed.typedItensFact, Typed.typedItensFactSql),
+    q("typed_pedidos_fact", Typed.typedPedidosFact, Typed.typedPedidosFactSql),
+    q("typed_pesquisa", Typed.typedPesquisa, Typed.typedPesquisaSql),
     // A6/D4/J7: composite Pub/Sub message channel, produce → decode → dispatch
-    "message_roundtrip" -> ((s, dir) => Messages.messageRoundtrip(tune(s), dir)),
-    "message_pedidos_fact" -> ((s, dir) => Messages.messagePedidosFact(tune(s), dir)),
-    "message_itens_fact" -> ((s, dir) => Messages.messageItensFact(tune(s), dir)),
+    q("message_roundtrip", Messages.messageRoundtrip, Messages.messageRoundtripSql),
+    q("message_pedidos_fact", Messages.messagePedidosFact, Messages.messagePedidosFactSql),
+    q("message_itens_fact", Messages.messageItensFact, Messages.messageItensFactSql),
     // A2/D10: real staged blob zone scanned with input_file_name provenance
-    "zone_scan" -> ((s, dir) => Ingest.zoneScan(tune(s), dir)),
+    q("zone_scan", Ingest.zoneScan, Ingest.zoneScanSql),
     // A4/E1/D6: paginated CSV export read with explicit schema + provenance
-    "csv_zone_scan" -> ((s, dir) => Ingest.csvZoneScan(tune(s), dir)),
+    q("csv_zone_scan", Ingest.csvZoneScan, Ingest.csvZoneScanSql),
     // Schema evolution: two-generation parquet zone through mergeSchema
-    "schema_drift_scan" -> ((s, dir) => Ingest.schemaDriftScan(tune(s), dir)),
+    q("schema_drift_scan", Ingest.schemaDriftScan, Ingest.schemaDriftScanSql),
     // Scale pattern: salted two-stage aggregation for hot keys
-    "events_salted_agg" -> ((s, dir) => Skew.eventsSaltedAgg(tune(s), dir)),
+    q("events_salted_agg", Skew.eventsSaltedAgg, Skew.eventsSaltedAggSql),
     // salt/replicate hot-key join — row-identical to the plain equi-join
-    "skew_join_agg" -> ((s, dir) => Skew.skewJoinAgg(tune(s), dir)),
+    q("skew_join_agg", Skew.skewJoinAgg, Skew.skewJoinAggSql),
     // Temporal joins/state: as-of, bounded range join, SCD2 history
-    "events_asof" -> ((s, dir) => Temporal.eventsAsof(tune(s), dir)),
-    "events_range_join" -> ((s, dir) => Temporal.eventsRangeJoin(tune(s), dir)),
-    "scd2_build" -> ((s, dir) => Temporal.scd2Build(tune(s), dir)),
-    "scd2_lookup" -> ((s, dir) => Temporal.scd2Lookup(tune(s), dir)),
-    "cdc_merge" -> ((s, dir) => Temporal.cdcMerge(tune(s), dir)),
+    q("events_asof", Temporal.eventsAsof, Temporal.eventsAsofSql),
+    q("events_range_join", Temporal.eventsRangeJoin, Temporal.eventsRangeJoinSql),
+    q("scd2_build", Temporal.scd2Build, Temporal.scd2BuildSql),
+    q("scd2_lookup", Temporal.scd2Lookup, Temporal.scd2LookupSql),
+    q("cdc_merge", Temporal.cdcMerge, Temporal.cdcMergeSql),
     // Sketch + exact-verify: bounded-memory heavy hitters
-    "heavy_hitters" -> ((s, dir) => Sketches.heavyHitters(tune(s), dir)),
-    "hll_distinct" -> ((s, dir) => Sketches.hllDistinct(tune(s), dir)),
+    q("heavy_hitters", Sketches.heavyHitters(_, _), Sketches.heavyHittersSql()),
+    q("hll_distinct", Sketches.hllDistinct, Sketches.hllDistinctSql),
     // Exact selection without a global sort: histogram pass + bucket-local rank
-    "quantiles_2pass" -> ((s, dir) => Sketches.quantiles2pass(tune(s), dir)),
+    q("quantiles_2pass", Sketches.quantiles2pass(_, _), Sketches.quantiles2passSql()),
     // Bloom-pruned semi-join: probe rows filtered before their shuffle
-    "bloom_semi_join" -> ((s, dir) => Sketches.bloomSemiJoin(tune(s), dir)),
+    q("bloom_semi_join", Sketches.bloomSemiJoin(_, _), Sketches.bloomSemiJoinSql),
     // Per-group exact quantiles, zero driver involvement (unbounded G)
-    "group_quantiles" -> ((s, dir) => Sketches.groupQuantiles2pass(tune(s), dir)),
+    q("group_quantiles", Sketches.groupQuantiles2pass(_, _), Sketches.groupQuantiles2passSql()),
     // Tukey-fence outliers composed on the relational group quantiles
-    "iqr_outliers" -> ((s, dir) => Sketches.iqrOutliers(tune(s), dir)),
+    q("iqr_outliers", Sketches.iqrOutliers, Sketches.iqrOutliersSql),
     // robust per-group mean: exact p05/p95 cuts, clamp, grid-LONG means
-    "winsorized_stats" -> ((s, dir) => Sketches.winsorizedStats(tune(s), dir)),
+    q("winsorized_stats", Sketches.winsorizedStats, Sketches.winsorizedStatsSql),
     // Corpus preparation: quality rules, PII redaction, sequence packing
-    "quality_filter" -> ((s, dir) => CorpusOps.qualityFilter(tune(s), dir)),
+    q("quality_filter", CorpusOps.qualityFilter, CorpusOps.qualityFilterSql),
     // classifier-cutoff calibration: survival curve over 101 score buckets
-    "quality_threshold_sweep" -> ((s, dir) => CorpusOps.qualityThresholdSweep(tune(s), dir)),
-    "pii_scrub" -> ((s, dir) => CorpusOps.piiScrub(tune(s), dir)),
-    "html_extract" -> ((s, dir) => CorpusOps.htmlExtract(tune(s), dir)),
-    "url_dedup" -> ((s, dir) => CorpusOps.urlDedup(tune(s), dir)),
-    "seq_pack" -> ((s, dir) => CorpusOps.seqPack(tune(s), dir)),
-    "rep_ngrams" -> ((s, dir) => CorpusOps.repNgrams(tune(s), dir)),
-    "bm25_score" -> ((s, dir) => CorpusOps.bm25Score(tune(s), dir)),
-    "boilerplate_ngrams" -> ((s, dir) => CorpusOps.boilerplateNgrams(tune(s), dir)),
-    "corpus_pipeline" -> ((s, dir) => CorpusOps.corpusPipeline(tune(s), dir)),
+    q("quality_threshold_sweep", CorpusOps.qualityThresholdSweep, CorpusOps.qualityThresholdSweepSql),
+    q("pii_scrub", CorpusOps.piiScrub, CorpusOps.piiScrubSql),
+    q("html_extract", CorpusOps.htmlExtract, CorpusOps.htmlExtractSql),
+    q("url_dedup", CorpusOps.urlDedup, CorpusOps.urlDedupSql),
+    q("seq_pack", CorpusOps.seqPack(_, _), CorpusOps.seqPackSql()),
+    q("rep_ngrams", CorpusOps.repNgrams, CorpusOps.repNgramsSql),
+    q("bm25_score", CorpusOps.bm25Score(_, _), CorpusOps.bm25ScoreSql),
+    q("boilerplate_ngrams", CorpusOps.boilerplateNgrams(_, _), CorpusOps.boilerplateNgramsSql),
+    q("corpus_pipeline", CorpusOps.corpusPipeline(_, _), CorpusOps.corpusPipelineSql),
     // per-source survival through quality → dedup → decontamination gates
-    "curation_funnel" -> ((s, dir) => CorpusOps.curationFunnel(tune(s), dir)),
-    "doc_chunks" -> ((s, dir) => CorpusOps.docChunks(tune(s), dir)),
-    "cdc_chunks" -> ((s, dir) => CorpusOps.cdcChunks(tune(s), dir)),
-    "cdc_dedup" -> ((s, dir) => CorpusOps.cdcDedup(tune(s), dir)),
+    q("curation_funnel", CorpusOps.curationFunnel, CorpusOps.curationFunnelSql),
+    q("doc_chunks", CorpusOps.docChunks(_, _), CorpusOps.docChunksSql()),
+    q("cdc_chunks", CorpusOps.cdcChunks(_, _), CorpusOps.cdcChunksSql()),
+    q("cdc_dedup", CorpusOps.cdcDedup(_, _), CorpusOps.cdcDedupSql()),
     // Extension: IVF centroid training (Lloyd's) + split/profile utilities
-    "kmeans_train" -> ((s, dir) => Clustering.kmeansTrain(tune(s), dir)),
+    q("kmeans_train", Clustering.kmeansTrain(_, _), Clustering.kmeansTrainSql),
     // cluster-quality grade of the trained quantizer (simplified silhouette)
-    "kmeans_silhouette" -> ((s, dir) => Clustering.kmeansSilhouette(tune(s), dir)),
-    "cluster_sample" -> ((s, dir) => Clustering.clusterSample(tune(s), dir)),
-    "embedding_drift" -> ((s, dir) => Clustering.embeddingDrift(tune(s), dir)),
+    q("kmeans_silhouette", Clustering.kmeansSilhouette, Clustering.kmeansSilhouetteSql()),
+    q("cluster_sample", Clustering.clusterSample(_, _), Clustering.clusterSampleSql()),
+    q("embedding_drift", Clustering.embeddingDrift, Clustering.embeddingDriftSql),
     // Single-pass mergeable outer-product accumulator (PCA building block)
-    "embedding_gram" -> ((s, dir) => Clustering.embeddingGram(tune(s), dir)),
+    q("embedding_gram", Clustering.embeddingGram, Clustering.embeddingGramSql),
     // PC1 projection via driver power iteration on the collected Gram;
     // the oracle unrolls the same 50 iterations as ordered-SUM CTE pairs
     // over the 2,080-cell Gram (Clustering.pcaProjectSql), plus the
     // Rayleigh-quotient dominance spec (OperatorsSpec) as the semantic gate
-    "pca_project" -> ((s, dir) => Clustering.pcaProject(tune(s), dir)),
-    "embedding_outliers" -> ((s, dir) => Clustering.embeddingOutliers(tune(s), dir)),
-    "stratified_split" -> ((s, dir) => Sampling.stratifiedSplit(tune(s), dir)),
-    "split_decontaminate" -> ((s, dir) => Sampling.splitDecontaminate(tune(s), dir)),
-    "global_shuffle" -> ((s, dir) => Sampling.globalShuffle(tune(s), dir)),
-    "curriculum_order" -> ((s, dir) => Sampling.curriculumOrder(tune(s), dir)),
-    "shard_manifest" -> ((s, dir) => Sampling.shardManifest(tune(s), dir)),
-    "source_quota" -> ((s, dir) => Sampling.sourceQuota(tune(s), dir)),
-    "weighted_sample" -> ((s, dir) => Sampling.weightedSample(tune(s), dir)),
-    "numeric_profile" -> ((s, dir) => Quality.numericProfile(tune(s), dir)),
+    q("pca_project", Clustering.pcaProject(_, _), Clustering.pcaProjectSql()),
+    q("embedding_outliers", Clustering.embeddingOutliers(_, _), Clustering.embeddingOutliersSql()),
+    q("stratified_split", Sampling.stratifiedSplit(_, _), Sampling.stratifiedSplitSql),
+    q("split_decontaminate", Sampling.splitDecontaminate(_, _), Sampling.splitDecontaminateSql),
+    q("global_shuffle", Sampling.globalShuffle(_, _), Sampling.globalShuffleSql),
+    q("curriculum_order", Sampling.curriculumOrder(_, _), Sampling.curriculumOrderSql()),
+    q("shard_manifest", Sampling.shardManifest(_, _), Sampling.shardManifestSql),
+    q("source_quota", Sampling.sourceQuota(_, _), Sampling.sourceQuotaSql),
+    q("weighted_sample", Sampling.weightedSample(_, _), Sampling.weightedSampleSql()),
+    q("numeric_profile", Quality.numericProfile, Quality.numericProfileSql),
     // single-pass exact-moment Pearson correlation matrix (d² broadcast stats)
-    "numeric_corr" -> ((s, dir) => Quality.numericCorr(tune(s), dir)),
+    q("numeric_corr", Quality.numericCorr, Quality.numericCorrSql),
     // Record linkage: blocked fuzzy self-join on the part dimension
-    "fuzzy_match" -> ((s, dir) => Quality.fuzzyMatch(tune(s), dir)),
+    q("fuzzy_match", Quality.fuzzyMatch(_, _), Quality.fuzzyMatchSql()),
     // Length-distribution quantiles per language stratum
-    "len_quantiles" -> ((s, dir) => TextOps.lenQuantiles(tune(s), dir)),
+    q("len_quantiles", TextOps.lenQuantiles, TextOps.lenQuantilesSql),
   )
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "itens_fact" -> Facts.itensFactSql,
-    "pedidos_fact" -> Facts.pedidosFactSql,
-    "copurchase_topk" -> Facts.copurchaseTopkSql,
-    "retention_cohorts" -> Analytics.retentionCohortsSql,
-    "pagerank_parts" -> Graph.pagerankPartsSql,
-    "triangle_parts" -> Graph.trianglePartsSql,
-    "triangle_parts_t2" -> Graph.trianglePartsThresholdSql(2),
-    "kcore_parts" -> Graph.kcorePartsSql(),
-    "ann_ivf_mp" -> Similarity.annIvfMultiprobeSql(),
-    "rfm_segments" -> Analytics.rfmSegmentsSql,
-    "rfm_segments_approx" -> Analytics.rfmSegmentsApproxSql,
-    "abc_parts" -> Analytics.abcPartsSql,
-    "revenue_anomaly" -> Analytics.revenueAnomalySql,
-    "basket_rules" -> Analytics.basketRulesSql,
-    "item_neighbors" -> Analytics.itemNeighborsSql,
-    "gap_fill" -> Analytics.gapFillSql,
-    "sales_rollup" -> Analytics.salesRollupSql,
-    "sales_cube" -> Analytics.salesCubeSql,
-    "sales_pivot" -> Analytics.salesPivotSql,
-    "rolling_revenue" -> Analytics.rollingRevenueSql,
-    "brand_nation_margin" -> Analytics.brandNationMarginSql,
-    "ids_distinct" -> Quality.idsDistinctSql,
-    "recon_sets" -> Quality.reconSetsSql,
-    "set_equality" -> Quality.setEqualitySql,
-    "dup_resolution" -> Quality.dupResolutionSql,
-    "anti_join_dedupe" -> Quality.antiJoinDedupeSql,
-    "file_groups" -> Quality.fileGroupsSql,
-    "count_verify" -> Quality.countVerifySql,
-    "dq_expectations" -> Quality.dqExpectationsSql,
-    "k_anonymity" -> Quality.kAnonymitySql(),
-    "dp_noisy_counts" -> Quality.dpNoisyCountsSql(),
-    "folder_completeness" -> Quality.folderCompletenessSql,
-    "table_profile" -> Quality.tableProfileSql,
-    "raw_unwrap" -> RawLoad.rawUnwrapSql,
-    "raw_explode" -> RawLoad.rawExplodeSql,
-    "br_dates" -> RawLoad.brDatesSql,
-    "filename_keys" -> RawLoad.filenameKeysSql,
-    "categoria" -> RawLoad.categoriaSql,
-    "validate_route" -> RawLoad.validateRouteSql,
-    "contatos_dim" -> Dimensions.contatosDimSql,
-    "enrich_join" -> Dimensions.enrichJoinSql,
-    "first_match" -> Dimensions.firstMatchSql,
-    "events_window" -> EventsOps.eventsWindowSql,
-    "events_session" -> EventsOps.eventsSessionSql,
-    "events_dedupe" -> EventsOps.eventsDedupeSql,
-    "events_props" -> EventsOps.eventsPropsSql,
-    "events_funnel" -> EventsOps.eventsFunnelSql,
-    "funnel_latency" -> EventsOps.funnelLatencySql(),
-    "watermark_sweep" -> EventsOps.watermarkSweepSql(),
-    "events_hopping" -> EventsOps.eventsHoppingSql,
-    "journey_topk" -> EventsOps.journeyTopkSql(),
-    "text_stats" -> TextOps.textStatsSql,
-    "lang_id" -> TextOps.langIdSql,
-    "token_count" -> TextOps.tokenCountSql,
-    "token_fertility" -> TextOps.tokenFertilitySql,
-    "char_coverage" -> TextOps.charCoverageSql(),
-    "lang_confusion" -> TextOps.langConfusionSql,
-    "nb_lang_confusion" -> TextOps.nbLangConfusionSql(),
-    "fingerprint" -> TextOps.fingerprintSql,
-    "dedup_exact" -> Dedup.dedupExactSql,
-    "dedup_minhash" -> Dedup.dedupMinhashSql,
-    "dedup_jaccard" -> Dedup.dedupJaccardSql,
-    "dedup_minhash_eval" -> Dedup.dedupMinhashEvalSql,
-    "dedup_simhash" -> Dedup.dedupSimhashSql,
-    "dedup_embedding" -> Dedup.dedupEmbeddingSql,
-    "dedup_embedding_lsh" -> Dedup.dedupEmbeddingLshSql(8),
-    "dedup_embedding_lsh12" -> Dedup.dedupEmbeddingLshSql(12),
-    "dedup_embedding_lsh_auto" -> Dedup.dedupEmbeddingLshAutoSql,
-    "image_dedup_incr" -> Multimodal.imageDedupIncrementalSql,
-    "audio_dedup_incr" -> Multimodal.audioDedupIncrementalSql,
-    "video_dedup_incr" -> Multimodal.videoDedupIncrementalSql,
-    "image_dedup_incr_eval" -> Multimodal.imageDedupIncrEvalSql,
-    "audio_dedup_incr_eval" -> Multimodal.audioDedupIncrEvalSql,
-    "video_dedup_incr_eval" -> Multimodal.videoDedupIncrEvalSql,
-    "dedup_semantic" -> Dedup.dedupSemanticSql(),
-    "semantic_decontaminate" -> Dedup.semanticDecontaminateSql(),
-    "dedup_components" -> Dedup.dedupComponentsSql,
-    "dup_cluster_sizes" -> Dedup.dupClusterSizesSql,
-    "dedup_canonical" -> Dedup.dedupCanonicalSql,
-    "substring_dup_spans" -> Dedup.substringDupSpansSql,
-    "substring_excise" -> Dedup.substringExciseSql,
-    "dedup_incremental" -> Dedup.dedupIncrementalSql,
-    "dedup_prefix_join" -> Dedup.dedupPrefixJoinSql,
-    "dup_score_hist" -> Dedup.dupScoreHistSql,
-    "dup_cross_source" -> Dedup.dupCrossSourceSql,
-    "source_overlap" -> Dedup.sourceOverlapSql,
-    "doc_novelty" -> Dedup.docNoveltySql,
-    "contamination_check" -> Dedup.contaminationCheckSql,
-    "corpus_sample" -> Sampling.corpusSampleSql,
-    "mix_temperature" -> Sampling.mixTemperatureSql,
-    "domain_mix" -> Sampling.domainMixSql(),
-    "corpus_remix" -> Sampling.corpusRemixSql(),
-    "vocab_topk" -> TextOps.vocabTopkSql,
-    "tfidf_topk" -> TextOps.tfidfTopkSql,
-    "inverted_index" -> TextOps.invertedIndexSql(),
-    "bigram_lm" -> TextOps.bigramLmSql(),
-    "bigram_kn" -> TextOps.bigramKnSql(),
-    "doc_lm_score" -> TextOps.docLmScoreSql,
-    "doc_lm_score_kn" -> TextOps.docLmScoreKnSql,
-    "vocab_drift" -> TextOps.vocabDriftSql(),
-    "moore_lewis" -> TextOps.mooreLewisSql(),
-    "bm25_topk" -> TextOps.bm25TopkSql(),
-    "bm25_topk_pruned" -> TextOps.bm25TopkPrunedSql(),
-    "bm25_index_build" -> TextOps.bm25IndexBuildSql(),
-    // the indexed query path answers EXACTLY the pruned form's question —
-    // one oracle text, two plans (recompute vs read-the-staged-prefix)
-    "bm25_topk_indexed" -> TextOps.bm25TopkPrunedSql(),
-    "bm25_index_merge" -> TextOps.bm25IndexMergeSql(),
-    "bm25_index_apply" -> TextOps.bm25IndexApplySql(),
-    "bm25_index_drift" -> TextOps.bm25IndexDriftSql(),
-    // compaction ≡ rebuild over the same corpus — one oracle text checks
-    // both plans (the bm25_topk_indexed precedent)
-    "bm25_index_compact" -> TextOps.bm25IndexBuildSql(),
-    // the policy query: drift mean, tau comparison, and BOTH serve
-    // branches replayed — the DECISION is oracle-checked, not just content
-    "bm25_auto_compact" -> TextOps.bm25AutoCompactSql(),
-    "pmi_collocations" -> TextOps.pmiCollocationsSql(),
-    "bpe_pairs" -> TextOps.bpePairsSql(),
-    "bpe_merges" -> TextOps.bpeMergesSql(),
-    "bpe_encode" -> TextOps.bpeEncodeSql(),
-    "rollup_replay" -> streaming.Streaming.rollupReplaySql,
-    "hh_replay" -> streaming.Streaming.hhReplaySql(),
-    "bloom_replay" -> streaming.Streaming.bloomReplaySql,
-    "funnel_replay" -> EventsOps.eventsFunnelSql,
-    "ann_topk" -> Similarity.annTopkSql,
-    "ann_topk_agg" -> Similarity.annTopkSql, // same contract as ann_topk
-    "ann_ivf" -> Similarity.annIvfSql,
-    "ann_ivf_trained" -> Similarity.annIvfTrainedSql,
-    "ann_quantized" -> Similarity.annQuantizedSql,
-    "ann_pq" -> Similarity.annPqSql(),
-    "ann_ivfpq" -> Similarity.annIvfPqSql(),
-    "rrf_fusion" -> Similarity.hybridRrfSql(),
-    "ann_recall" -> Similarity.annRecallSql,
-    "multimodal_features" -> Multimodal.multimodalFeaturesSql,
-    "media_frames" -> Multimodal.mediaFramesSql,
-    "multimodal_decode" -> Multimodal.multimodalDecodeSql,
-    "multimodal_audio" -> Multimodal.multimodalAudioSql,
-    "image_dedup" -> Multimodal.imageDedupSql,
-    "audio_dedup" -> Multimodal.audioDedupSql,
-    "video_dedup" -> Multimodal.videoDedupSql,
-    "image_dedup_eval" -> Multimodal.imageDedupEvalSql,
-    "audio_dedup_eval" -> Multimodal.audioDedupEvalSql,
-    "video_dedup_eval" -> Multimodal.videoDedupEvalSql,
-    "sft_render" -> CorpusOps.sftRenderSql,
-    "dpo_pairs" -> CorpusOps.dpoPairsSql,
-    "sft_pack" -> CorpusOps.sftPackSql(),
-    "pack_stats" -> CorpusOps.packStatsSql(),
-    "sft_pack_tokens" -> CorpusOps.sftPackTokensSql(),
-    "sft_pipeline" -> CorpusOps.sftPipelineSql(),
-    "sft_pipeline_tokens" -> CorpusOps.sftPipelineTokensSql(),
-    "token_pack" -> CorpusOps.tokenPackSql(),
-    "lr_quality" -> CorpusOps.lrQualitySql(),
-    "unigram_lm" -> TextOps.unigramLmSql(),
-    "unigram_soft" -> TextOps.unigramSoftSql(),
-    "multimodal_video" -> Multimodal.multimodalVideoSql,
-    "unigram_encode" -> TextOps.unigramEncodeSql(),
-    "ann_ivfpq_res" -> Similarity.annIvfPqResSql(),
-    "ann_nndescent" -> Similarity.annNndescentSql(),
-    "ann_graph_build" -> Similarity.annGraphBuildSql(),
-    "ann_pq_build" -> Similarity.annPqBuildSql(),
-    "ann_graph_search" -> Similarity.annGraphSearchSql(),
-    "ann_graph_oos" -> Similarity.annGraphSearchOosSql(),
-    "ann_graph_recall" -> Similarity.annGraphRecallSql(),
-    "ann_graph_anchor" -> Similarity.annGraphAnchorSql(),
-    "ann_graph_insert" -> Similarity.annGraphInsertSql(),
-    "ann_graph_apply" -> Similarity.annGraphApplySql(),
-    "ann_graph_drift" -> Similarity.annGraphDriftSql(),
-    // compaction ≡ the full-corpus descent — one oracle text, two plans
-    "ann_graph_compact" -> Similarity.annNndescentSql(),
-    "ann_graph_auto_compact" -> Similarity.annGraphAutoCompactSql(),
-    "dsir_weights" -> TextOps.dsirWeightsSql(),
-    "ppl_buckets" -> TextOps.pplBucketsSql,
-    "wordpiece_encode" -> TextOps.wordpieceEncodeSql(),
-    "cms_counts" -> Sketches.cmsCountsSql(),
-    "checksum_sorted" -> Checksums.checksumSortedSql,
-    "typed_itens_fact" -> Typed.typedItensFactSql,
-    "typed_pedidos_fact" -> Typed.typedPedidosFactSql,
-    "typed_pesquisa" -> Typed.typedPesquisaSql,
-    "message_roundtrip" -> Messages.messageRoundtripSql,
-    "message_pedidos_fact" -> Messages.messagePedidosFactSql,
-    "message_itens_fact" -> Messages.messageItensFactSql,
-    "zone_scan" -> Ingest.zoneScanSql,
-    "csv_zone_scan" -> Ingest.csvZoneScanSql,
-    "schema_drift_scan" -> Ingest.schemaDriftScanSql,
-    "events_salted_agg" -> Skew.eventsSaltedAggSql,
-    "skew_join_agg" -> Skew.skewJoinAggSql,
-    "events_asof" -> Temporal.eventsAsofSql,
-    "events_range_join" -> Temporal.eventsRangeJoinSql,
-    "scd2_build" -> Temporal.scd2BuildSql,
-    "scd2_lookup" -> Temporal.scd2LookupSql,
-    "cdc_merge" -> Temporal.cdcMergeSql,
-    "heavy_hitters" -> Sketches.heavyHittersSql(),
-    "hll_distinct" -> Sketches.hllDistinctSql,
-    "quantiles_2pass" -> Sketches.quantiles2passSql(),
-    "bloom_semi_join" -> Sketches.bloomSemiJoinSql,
-    "group_quantiles" -> Sketches.groupQuantiles2passSql(),
-    "iqr_outliers" -> Sketches.iqrOutliersSql,
-    "winsorized_stats" -> Sketches.winsorizedStatsSql,
-    "quality_filter" -> CorpusOps.qualityFilterSql,
-    "quality_threshold_sweep" -> CorpusOps.qualityThresholdSweepSql,
-    "pii_scrub" -> CorpusOps.piiScrubSql,
-    "html_extract" -> CorpusOps.htmlExtractSql,
-    "url_dedup" -> CorpusOps.urlDedupSql,
-    "seq_pack" -> CorpusOps.seqPackSql(),
-    "rep_ngrams" -> CorpusOps.repNgramsSql,
-    "bm25_score" -> CorpusOps.bm25ScoreSql,
-    "boilerplate_ngrams" -> CorpusOps.boilerplateNgramsSql,
-    "corpus_pipeline" -> CorpusOps.corpusPipelineSql,
-    "curation_funnel" -> CorpusOps.curationFunnelSql,
-    "doc_chunks" -> CorpusOps.docChunksSql(),
-    "cdc_chunks" -> CorpusOps.cdcChunksSql(),
-    "cdc_dedup" -> CorpusOps.cdcDedupSql(),
-    "kmeans_train" -> Clustering.kmeansTrainSql,
-    "kmeans_silhouette" -> Clustering.kmeansSilhouetteSql(),
-    "cluster_sample" -> Clustering.clusterSampleSql(),
-    "embedding_drift" -> Clustering.embeddingDriftSql,
-    "embedding_gram" -> Clustering.embeddingGramSql,
-    "pca_project" -> Clustering.pcaProjectSql(),
-    "embedding_outliers" -> Clustering.embeddingOutliersSql(),
-    "stratified_split" -> Sampling.stratifiedSplitSql,
-    "split_decontaminate" -> Sampling.splitDecontaminateSql,
-    "global_shuffle" -> Sampling.globalShuffleSql,
-    "curriculum_order" -> Sampling.curriculumOrderSql(),
-    "shard_manifest" -> Sampling.shardManifestSql,
-    "source_quota" -> Sampling.sourceQuotaSql,
-    "weighted_sample" -> Sampling.weightedSampleSql(),
-    "numeric_profile" -> Quality.numericProfileSql,
-    "numeric_corr" -> Quality.numericCorrSql,
-    "fuzzy_match" -> Quality.fuzzyMatchSql(),
-    "len_quantiles" -> TextOps.lenQuantilesSql,
-  )
+  /** Name → build function on a tuned session. Renders no oracle text. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(e => e.name -> ((s: SparkSession, d: String) => e.build(tune(s), d))).toMap
+
+  /** Name → oracle SQL; renders every oracle, so only the dump asks. */
+  def oracleSql: Map[String, String] = registry.map(e => e.name -> e.oracle()).toMap
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.Streaming
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
@@ -17,15 +16,7 @@ import java.nio.file.Files
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkEntry.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val work = Files.createTempDirectory("graft-stream").toString
     val dropDir = s"$work/drop"; val rawDir = s"$work/raw"

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Harness.jsonString
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,15 +9,7 @@ object Verify {
     // optional trailing names: dump only those queries (local iteration);
     // the driver passes exactly two args and dumps everything
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // Delete the previous dump for a query BEFORE building its DataFrame:
     // construction is eagerly analyzed, so a regression that throws during
@@ -45,20 +37,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally Hygiene.releaseAll(spark) // drop checkpoint blocks between dumps
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // The authoritative query manifest: EVERY registered query name, written
     // on full runs only (a subset run is a local iteration, not a gate).
@@ -67,7 +47,7 @@ object Verify {
     // the round's CORRECTNESS artifact shipped as `{}` and nothing noticed.
     if (only.isEmpty)
       Files.writeString(Paths.get(s"$outDir/queries.json"),
-        SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+        SparkEntry.queries.keys.toSeq.sorted.map(jsonString).mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -29,4 +29,10 @@ class EntrySmokeSpec extends SparkSuite {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracleSql keys without a query: $orphans")
   }
+
+  test("every registry name is declared once") {
+    // a repeated name would collapse silently in the registry's .toMap
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"registry names declared more than once: $dups")
+  }
 }
