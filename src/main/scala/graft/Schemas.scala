@@ -144,6 +144,36 @@ object Schemas {
       StructField("codigo_erro", StringType),
       StructField("produto", produto))))))
 
+  /** `full` cut down to the fields named by dotted paths; a path through an
+    * array of structs names fields of its elements (`retorno.pedido.itens.id`).
+    * A path ending on a struct keeps the whole subtree. Kept fields stay in
+    * `full`'s order, and an unknown name throws. A consumer that parses with
+    * the cut schema skips every other subtree of the payload text. */
+  def prune(full: StructType, paths: String*): StructType = {
+    def cut(dt: DataType, at: String, rest: Seq[List[String]]): DataType =
+      if (rest.exists(_.isEmpty)) dt
+      else dt match {
+        case ArrayType(elem, containsNull) => ArrayType(cut(elem, at, rest), containsNull)
+        case st: StructType =>
+          val byName = rest.groupBy(_.head)
+          byName.keys.find(!st.fieldNames.contains(_)).foreach { n =>
+            throw new IllegalArgumentException(
+              s"no field '$n' under '${at.drop(1)}' (has ${st.fieldNames.mkString(", ")})")
+          }
+          StructType(st.fields.filter(f => byName.contains(f.name)).map { f =>
+            f.copy(dataType = cut(f.dataType, s"$at.${f.name}", byName(f.name).map(_.tail)))
+          })
+        case leaf => throw new IllegalArgumentException(
+          s"'${at.drop(1)}' is a ${leaf.simpleString}, it has no field '${rest.head.head}'")
+      }
+    cut(full, "", paths.map(_.split('.').toList)).asInstanceOf[StructType]
+  }
+
+  /** [[pdvEnvelope]] pruned to the B3 status gate plus the named
+    * `retorno.pedido` paths. */
+  def pdvPruned(pedidoPaths: String*): StructType = prune(pdvEnvelope,
+    "retorno.status_processamento" +: pedidoPaths.map("retorno.pedido." + _): _*)
+
   /** Contacts page payload (reference `contatos_to_bq/main.py:83-94`). */
   val contatosEnvelope: StructType = StructType(Seq(
     StructField("retorno", StructType(Seq(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Exprs, Tables}
+import graft.{Exprs, Schemas, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -34,6 +34,7 @@ import org.apache.spark.sql.types._
   * re-materialize the producer once per branch).
   */
 object Messages {
+  import FactsFromRaw.{iDescUnit, iQtd, iValor}
 
   /** Consumer-side message schema. Sub-payload schemas are caller-supplied
     * so each subscriber parses only the subtrees it touches (the same hand
@@ -51,8 +52,8 @@ object Messages {
 
   /** Full-fidelity message schema over the faithful payload schemas —
     * what a subscriber that loads every field parses with. */
-  def fullMessageSchema: StructType = messageSchema(graft.Schemas.pdvEnvelope,
-    graft.Schemas.produtoEnvelope, graft.Schemas.pesquisaEnvelope)
+  def fullMessageSchema: StructType = messageSchema(Schemas.pdvEnvelope,
+    Schemas.produtoEnvelope, Schemas.pesquisaEnvelope)
 
   /** J7 — produce: serialize the composite struct and base64 the bytes (the
     * wire form a Pub/Sub push delivery carries in `message.data`;
@@ -145,10 +146,8 @@ object Messages {
   /** The wire fixture as a STAGED artifact (built once per corpus,
     * content-keyed, atomic publish — the [[Staged]] pattern every other
     * fixture-producing family uses): the oracle-gated consumer queries
-    * time the CONSUME side, not the synthetic producer round-trip that
-    * dominated the r15 gate's #2/#3 entries (`message_pedidos_fact`
-    * 7.4 s / `message_itens_fact` 6.9 s at sf0.1, and the r15-rerun's
-    * 87 s contention spike landed exactly there). In production the wire
+    * time the CONSUME side, not the synthetic producer round-trip, which
+    * would otherwise dominate their time. In production the wire
     * IS a durable log the consumers re-read — the producer never runs
     * inside a subscriber's query. Oracles still replay produce → decode →
     * build from the BASE tables in DuckDB, so a stale or corrupt staged
@@ -161,29 +160,16 @@ object Messages {
 
   /** Consumer-side pruned pdv envelope: this query touches only the order
     * key, date, client and item ids, so the parser skips everything else. */
-  private val prunedPdvEnvelope: StructType = StructType(Seq(
-    StructField("retorno", StructType(Seq(
-      StructField("status_processamento", StringType),
-      StructField("pedido", StructType(Seq(
-        StructField("id", LongType),
-        StructField("data", StringType),
-        StructField("formaPagamento", StringType),
-        StructField("contato", StructType(Seq(
-          StructField("cpfCnpj", StringType)))),
-        StructField("itens", ArrayType(StructType(Seq(
-          StructField("id", LongType)))))))))))))
+  private val prunedPdvEnvelope: StructType = Schemas.pdvPruned(
+    "id", "data", "formaPagamento", "contato.cpfCnpj", "itens.id")
 
   /** The synthesized produto envelope carries 4 fields; parsing with the
     * matching pruned schema is equivalent to the full 59-field
     * [[graft.Schemas.produtoEnvelope]] (absent fields parse to null). */
-  private val prunedProdutoEnvelope: StructType = StructType(Seq(
-    StructField("retorno", StructType(Seq(
-      StructField("status_processamento", StringType),
-      StructField("produto", StructType(Seq(
-        StructField("id", LongType),
-        StructField("nome", StringType),
-        StructField("preco_custo", StringType),
-        StructField("categoria", StringType)))))))))
+  private val prunedProdutoEnvelope: StructType = Schemas.prune(
+    Schemas.produtoEnvelope, "retorno.status_processamento",
+    "retorno.produto.id", "retorno.produto.nome", "retorno.produto.preco_custo",
+    "retorno.produto.categoria")
 
   /** The full channel, produce → wire → consume → dispatch → raw loads →
     * order-grain reconciliation, as one oracle-checked batch query (the
@@ -205,15 +191,8 @@ object Messages {
     * streaming subscriber form, exercised by `graft.StreamDemo`. */
   def messageRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val schema = messageSchema(prunedPdvEnvelope, prunedProdutoEnvelope,
-      graft.Schemas.pesquisaEnvelope)
-    // G3 first-match over the pesquisa entries as an array fold (lexicographic
-    // struct min = the min(struct(...)) a grouped form computes); empty
-    // pedidos[] → element_at out of bounds → null, the left-join semantics.
-    val vend = when(
-      col("m.pedidos_pesquisa_data.retorno.status_processamento") === "3",
-      element_at(sort_array(transform(col("m.pedidos_pesquisa_data.retorno.pedidos"),
-        p => struct(p.getField("pedido").getField("id_vendedor").as("id_vendedor"),
-          p.getField("pedido").getField("nome_vendedor").as("nome_vendedor")))), 1))
+      Schemas.pesquisaEnvelope)
+    val vend = firstVendedor("m.pedidos_pesquisa_data")
     // Single-pass struct-algebra reconciliation (guide §2.4): `uuid` is
     // unique per message, so the per-uuid aggregate over the exploded
     // produto payloads was an IDENTITY grouping — computed here as per-row
@@ -227,9 +206,7 @@ object Messages {
     // null-term skip, all-null → null; property-tested in ExprsSpec). The
     // oracle TEXT is unchanged: DuckDB still replays the grouped form from
     // the base tables, so any semantic drift fails the hash gate.
-    val pd = filter(col("m.produto_data"), p =>
-      p.getField("retorno").getField("status_processamento") === "3" &&
-        p.getField("retorno").getField("produto").getField("id").isNotNull)
+    val pd = filter(col("m.produto_data"), produtoGated _)
     stagedMessages(spark, sfDir)
       .select(decode(col("data"), schema).as("m"))
       .filter(col("m.pdv_pedido_data.retorno.status_processamento") === "3")
@@ -266,34 +243,20 @@ object Messages {
 
   /** Consumer-side pruned pdv envelope for the fact build: exactly the
     * fields the two fact grains touch. */
-  private[graft] val factPdvEnvelope: StructType = StructType(Seq(
-    StructField("retorno", StructType(Seq(
-      StructField("status_processamento", StringType),
-      StructField("pedido", StructType(Seq(
-        StructField("id", LongType),
-        StructField("data", StringType),
-        StructField("desconto", StringType),
-        StructField("totalVenda", DoubleType),
-        StructField("formaPagamento", StringType),
-        StructField("contato", StructType(Seq(
-          StructField("cpfCnpj", StringType)))),
-        StructField("itens", ArrayType(StructType(Seq(
-          StructField("id", LongType),
-          StructField("idProduto", LongType),
-          StructField("valor", StringType),
-          StructField("quantidade", StringType),
-          StructField("desconto", StringType)))))))))))))
+  private[graft] val factPdvEnvelope: StructType = Schemas.pdvPruned(
+    "id", "data", "desconto", "totalVenda", "formaPagamento", "contato.cpfCnpj",
+    "itens.id", "itens.idProduto", "itens.valor", "itens.quantidade",
+    "itens.desconto")
 
   /** Message schema the fact subscriber parses with. */
   private[graft] def factMessageSchema: StructType = messageSchema(
-    factPdvEnvelope, prunedProdutoEnvelope, graft.Schemas.pesquisaEnvelope)
+    factPdvEnvelope, prunedProdutoEnvelope, Schemas.pesquisaEnvelope)
 
-  private def iValor(i: Column): Column = i.getField("valor").cast("double")
-  private def iQtd(i: Column): Column = i.getField("quantidade").cast("double")
-  private def iDPct(i: Column): Column =
-    coalesce(i.getField("desconto").cast("double"), lit(0d))
-  private def iDescUnit(i: Column): Column =
-    iValor(i) / (lit(1d) - iDPct(i) / 100) - iValor(i)
+  /** RawTables.produtoFromParsed's gate on one produto envelope: status '3'
+    * and a produto id (B4 drops the empty payloads). */
+  private def produtoGated(p: Column): Column =
+    p.getField("retorno").getField("status_processamento") === "3" &&
+      p.getField("retorno").getField("produto").getField("id").isNotNull
 
   /** C2 first-match produto lookup INSIDE the message: produto_data[]
     * carries this order's envelopes, so the lookup is an array find (first
@@ -301,19 +264,19 @@ object Messages {
     * missing/ungated produto yields null, which the matched-only folds
     * skip — the reference's `if item_data:` branch. */
   private def produtoOf(pd: Column, i: Column): Column =
-    element_at(filter(pd, p =>
-      p.getField("retorno").getField("status_processamento") === "3" &&
-        p.getField("retorno").getField("produto").getField("id").isNotNull &&
+    element_at(filter(pd, p => produtoGated(p) &&
         p.getField("retorno").getField("produto").getField("id")
           === i.getField("idProduto")), 1)
       .getField("retorno").getField("produto")
 
-  /** G3 first pesquisa entry (lexicographic struct min, the grouped-form
-    * semantics), null when the search returned no pedidos. */
-  private def firstVendedor: Column = when(
-    col("pedidos_pesquisa_data.retorno.status_processamento") === "3",
+  /** G3 first-match over the pesquisa payload at column path `pesquisa`, as
+    * an array fold (lexicographic struct min = the min(struct(...)) a
+    * grouped form computes); empty pedidos[] → element_at out of bounds →
+    * null, the left-join semantics. */
+  private def firstVendedor(pesquisa: String): Column = when(
+    col(s"$pesquisa.retorno.status_processamento") === "3",
     element_at(sort_array(transform(
-      col("pedidos_pesquisa_data.retorno.pedidos"),
+      col(s"$pesquisa.retorno.pedidos"),
       p => struct(p.getField("pedido").getField("id_vendedor").as("id_vendedor"),
         p.getField("pedido").getField("nome_vendedor").as("nome_vendedor")))), 1))
 
@@ -335,31 +298,26 @@ object Messages {
     val ped = col("pdv_pedido_data.retorno.pedido")
     val itens = ped.getField("itens")
     val pd = col("produto_data")
-    msg.select(
+    val pesquisa = "pedidos_pesquisa_data"
+    FactsFromRaw.withTotals(msg.select(Seq(
       col("uuid").as("msg_uuid"),
       ped.getField("id").as("pedido_id"),
       Exprs.brDate(ped.getField("data")).as("pedido_dia"),
       ped.getField("contato").getField("cpfCnpj").as("cliente_cpf"),
       ped.getField("formaPagamento").as("forma_pagamento"),
-      firstVendedor.getField("id_vendedor").as("vendedor_id"),
-      firstVendedor.getField("nome_vendedor").as("nome_vendedor"),
-      Exprs.gsumArray(itens, i => iValor(i) / (lit(1d) - iDPct(i) / 100))
-        .as("valor_sem_desconto"), // F2 per-unit quirk
-      Exprs.gsumArray(itens, iValor).as("valor_com_desconto"),
-      Exprs.gsumArray(itens, i => iValor(i) * iQtd(i)).as("base_pre_desconto"),
-      // F1/F5 matched-only: an unmatched item's term is null, skipped
-      coalesce(Exprs.gsumArray(itens, i =>
-        produtoOf(pd, i).getField("preco_custo").cast("double") * iQtd(i)),
-        lit(0d)).as("custo_total"),
-      coalesce(Exprs.gsumArray(itens, i =>
-        when(produtoOf(pd, i).getField("id").isNotNull, iDescUnit(i) * iQtd(i))),
-        lit(0d)).as("total_desconto_produtos"),
-      Exprs.parseDesconto(ped.getField("desconto"), ped.getField("totalVenda"))
-        .as("desconto_pedido"),
-      ped.getField("totalVenda").as("valor_faturado"))
-      .withColumn("desconto_total",
-        col("total_desconto_produtos") + col("desconto_pedido"))
-      .withColumn("valor_lucro", col("valor_faturado") - col("custo_total"))
+      firstVendedor(pesquisa).getField("id_vendedor").as("vendedor_id"),
+      firstVendedor(pesquisa).getField("nome_vendedor").as("nome_vendedor")) ++
+      FactsFromRaw.headerSums(itens) ++ Seq(
+        // F1/F5 matched-only: an unmatched item's term is null, skipped
+        coalesce(Exprs.gsumArray(itens, i =>
+          produtoOf(pd, i).getField("preco_custo").cast("double") * iQtd(i)),
+          lit(0d)).as("custo_total"),
+        coalesce(Exprs.gsumArray(itens, i =>
+          when(produtoOf(pd, i).getField("id").isNotNull, iDescUnit(i) * iQtd(i))),
+          lit(0d)).as("total_desconto_produtos"),
+        Exprs.parseDesconto(ped.getField("desconto"), ped.getField("totalVenda"))
+          .as("desconto_pedido"),
+        ped.getField("totalVenda").as("valor_faturado")): _*))
   }
 
   /** Item-grain fact from decoded messages — `sales_to_bq`'s
@@ -376,69 +334,32 @@ object Messages {
       ped.getField("contato").getField("cpfCnpj").as("cliente_cpf"),
       Exprs.parseDesconto(ped.getField("desconto"), ped.getField("totalVenda"))
         .as("desconto_pedido"),
-      Exprs.gsumArray(ped.getField("itens"), i => iValor(i) * iQtd(i))
-        .as("total_pre"),
+      FactsFromRaw.totalPre(ped.getField("itens")).as("total_pre"),
       col("produto_data").as("pd"),
       posexplode(ped.getField("itens")).as(Seq("pos", "item")))
-    val prod = produtoOf(col("pd"), col("item"))
-    val custo = prod.getField("preco_custo").cast("double")
-    val qtd = iQtd(col("item"))
-    val valorTotal = iValor(col("item")) * qtd
-    val share = valorTotal / col("total_pre")
+    val item = col("item")
+    val prod = produtoOf(col("pd"), item)
+    val valorTotal = iValor(item) * iQtd(item)
     it.filter(prod.getField("id").isNotNull) // inner: unmatched dropped
-      .select(
+      .select(Seq(
         col("msg_uuid"), col("pedido_id"),
         col("item.id").as("item_id"),
         col("item.idProduto").as("produto_id"),
-        col("pedido_dia"), col("cliente_cpf"),
-        Exprs.categoriaPrincipal(prod.getField("categoria"))
-          .as("categoria_principal"),
-        Exprs.categoriaSecundaria(prod.getField("categoria"))
-          .as("categoria_secundaria"),
-        qtd.as("quantidade"),
-        iValor(col("item")).as("valor_unitario"),
-        valorTotal.as("valor_total"),
-        iDescUnit(col("item")).as("desconto_unitario"),
-        (iDescUnit(col("item")) * qtd).as("desconto_produto"),
-        (col("desconto_pedido") * share).as("desconto_alocado"),
-        custo.as("preco_custo"),
-        (custo * qtd).as("custo_total"),
-        (valorTotal - iDescUnit(col("item")) * qtd
-          - col("desconto_pedido") * share - custo * qtd).as("lucro_item"))
+        col("pedido_dia"), col("cliente_cpf")) ++
+        FactsFromRaw.itemMetrics(item, prod.getField("categoria"), valorTotal,
+          valorTotal / col("total_pre"),
+          prod.getField("preco_custo").cast("double")): _*)
   }
 
-  /** Display projection for the order grain, mirrored on
-    * [[Typed.typedPedidosFact]] (+ the message uuid the reference threads
-    * into every fact row). Shared by the batch oracle query and the
-    * streaming fact sink so both emit identical rows. */
-  def pedidosFactFinal(df: DataFrame): DataFrame = df
-    .select(col("msg_uuid"), col("pedido_id"), col("pedido_dia"),
-      col("cliente_cpf"), col("forma_pagamento"),
-      col("vendedor_id"), col("nome_vendedor"),
-      col("valor_sem_desconto"), col("valor_com_desconto"),
-      col("base_pre_desconto"), col("total_desconto_produtos"),
-      col("custo_total"),
-      Exprs.r4(col("desconto_pedido")).as("desconto_pedido"),
-      Exprs.r4(col("desconto_total")).as("desconto_total"),
-      Exprs.r4(col("valor_faturado")).as("valor_faturado"),
-      Exprs.r4(col("valor_lucro")).as("valor_lucro"))
+  /** The order-grain display projection (+ the message uuid), shared by
+    * the batch oracle query and the streaming fact sink so both emit
+    * identical rows. */
+  def pedidosFactFinal(df: DataFrame): DataFrame =
+    FactsFromRaw.pedidosFinal(df, "msg_uuid")
 
-  /** Display projection for the item grain, mirrored on
-    * [[Typed.typedItensFact]] (+ msg_uuid). */
-  def itensFactFinal(df: DataFrame): DataFrame = df
-    .select(
-      col("msg_uuid"), col("pedido_id"), col("item_id"), col("produto_id"),
-      col("pedido_dia"), col("cliente_cpf"),
-      col("categoria_principal"), col("categoria_secundaria"),
-      col("quantidade"),
-      Exprs.r4(col("valor_unitario")).as("valor_unitario"),
-      Exprs.r4(col("valor_total")).as("valor_total"),
-      Exprs.r4(col("desconto_unitario")).as("desconto_unitario"),
-      Exprs.r4(col("desconto_produto")).as("desconto_produto"),
-      Exprs.r4(col("desconto_alocado")).as("desconto_alocado"),
-      Exprs.r4(col("preco_custo")).as("preco_custo"),
-      Exprs.r4(col("custo_total")).as("custo_total"),
-      Exprs.r4(col("lucro_item")).as("lucro_item"))
+  /** The item-grain display projection (+ msg_uuid). */
+  def itensFactFinal(df: DataFrame): DataFrame =
+    FactsFromRaw.itensFinal(df, "msg_uuid")
 
   /** Oracle-gated batch form of the fact subscriber's order grain: the
     * whole channel (produce → wire → decode → fact build) as one query. */

@@ -24,11 +24,11 @@ object RawTables {
   /** Parse ONCE behind the [[graft.plans.Opaque]] barrier, then gate (B3) on
     * the materialized struct. Without the barrier, filtering on a field of
     * the parsed struct gets the WHOLE `from_json` duplicated into the
-    * pushed-down filter condition (measured 2× JSON cost in round 1; the
-    * round-1 workaround — a second minimal-schema parse just for the gate —
-    * still tokenized the full payload text twice). `opaque` reports the
-    * parse nondeterministic, so the predicate stays above the projection
-    * and every payload string is parsed exactly once. */
+    * pushed-down filter condition (measured 2× JSON cost; a second
+    * minimal-schema parse just for the gate still tokenized the full
+    * payload text twice). `opaque` reports the parse nondeterministic, so
+    * the predicate stays above the projection and every payload string is
+    * parsed exactly once. */
   private def parsed(raw: DataFrame,
       envelope: org.apache.spark.sql.types.StructType): DataFrame =
     raw.select(col("uuid"), col("file_ts"),
@@ -118,23 +118,88 @@ object RawTables {
   *  - F2 is per-unit (`valor / (1 - d/100)`), NOT × quantidade.
   *  - item `desconto` is a percent-as-number string (F8); header
   *    `desconto` is dual-format (F6).
+  *
+  * This object is the one definition of that arithmetic and of the two
+  * fact display projections: the message subscriber ([[Messages]]) builds
+  * its facts from the same pieces, with the produto lookup as an in-message
+  * array find instead of a join.
   */
 object FactsFromRaw {
 
-  private val qtd = col("item.quantidade").cast("double")
-  private val valorUnit = col("item.valor").cast("double")
-  private val dPct = coalesce(col("item.desconto").cast("double"), lit(0d))
-  // F8: valor/(1−d/100) − valor, per unit
-  private val descontoUnit = valorUnit / (lit(1d) - dPct / 100) - valorUnit
-
-  // Array-lambda forms of the same item metrics, for header-grain folds
-  // computed BEFORE the explode (one-pass plans: a separate aggregate branch
-  // over exploded items would duplicate the whole upstream parse subtree —
-  // Spark plans are trees and sibling branches re-materialize shared input).
-  private def iValor(i: Column): Column = i.getField("valor").cast("double")
-  private def iQtd(i: Column): Column = i.getField("quantidade").cast("double")
+  // Accessors over one `itens[]` element. They serve both the exploded item
+  // row and the array-lambda folds computed BEFORE the explode (one-pass
+  // plans: a separate aggregate branch over exploded items would duplicate
+  // the whole upstream parse subtree — Spark plans are trees and sibling
+  // branches re-materialize shared input).
+  private[operators] def iValor(i: Column): Column = i.getField("valor").cast("double")
+  private[operators] def iQtd(i: Column): Column = i.getField("quantidade").cast("double")
   private def iDPct(i: Column): Column =
     coalesce(i.getField("desconto").cast("double"), lit(0d))
+  // F2: the undiscounted unit price, valor/(1−d/100)
+  private def iValorCheio(i: Column): Column = iValor(i) / (lit(1d) - iDPct(i) / 100)
+  // F8: valor/(1−d/100) − valor, per unit
+  private[operators] def iDescUnit(i: Column): Column = iValorCheio(i) - iValor(i)
+
+  /** F7 denominator: Σ valor × quantidade over ALL items of an `itens[]`
+    * array, as an integer-grid fold — order-independent, so it matches the
+    * oracle's grouped grid sum regardless of array vs row ordering. */
+  private[operators] def totalPre(itens: Column): Column =
+    Exprs.gsumArray(itens, i => iValor(i) * iQtd(i))
+
+  /** F2-F4 header sums over ALL items, the dropped ones included. */
+  private[operators] def headerSums(itens: Column): Seq[Column] = Seq(
+    Exprs.gsumArray(itens, iValorCheio).as("valor_sem_desconto"), // per-unit quirk
+    Exprs.gsumArray(itens, iValor).as("valor_com_desconto"),
+    totalPre(itens).as("base_pre_desconto"))
+
+  /** The item-grain columns categoria_principal … lucro_item (F7-F9) of one
+    * matched item: `share` is its F7 fraction of [[totalPre]], applied to
+    * the row's `desconto_pedido`; `custo` is its produto's unit cost. */
+  private[operators] def itemMetrics(item: Column, categoria: Column,
+      valorTotal: Column, share: Column, custo: Column): Seq[Column] = {
+    val qtd = iQtd(item)
+    val descUnit = iDescUnit(item)
+    Seq(
+      Exprs.categoriaPrincipal(categoria).as("categoria_principal"),
+      Exprs.categoriaSecundaria(categoria).as("categoria_secundaria"),
+      qtd.as("quantidade"),
+      iValor(item).as("valor_unitario"),
+      valorTotal.as("valor_total"),
+      descUnit.as("desconto_unitario"),
+      (descUnit * qtd).as("desconto_produto"),
+      (col("desconto_pedido") * share).as("desconto_alocado"),
+      custo.as("preco_custo"),
+      (custo * qtd).as("custo_total"),
+      (valorTotal - descUnit * qtd
+        - col("desconto_pedido") * share - custo * qtd).as("lucro_item"))
+  }
+
+  /** The total discount (F5 item discounts + F6 header discount) and the
+    * F10 profit, from the order-grain sums. */
+  private[operators] def withTotals(df: DataFrame): DataFrame = df
+    .withColumn("desconto_total",
+      col("total_desconto_produtos") + col("desconto_pedido"))
+    .withColumn("valor_lucro", col("valor_faturado") - col("custo_total"))
+
+  /** Display projection of the order grain: money rounded to 4 places,
+    * the grid sums as they are. `lineage` columns lead (the message uuid the
+    * reference threads into every fact row). */
+  def pedidosFinal(df: DataFrame, lineage: String*): DataFrame = df.select(
+    (lineage ++ Seq("pedido_id", "pedido_dia", "cliente_cpf",
+      "forma_pagamento", "vendedor_id", "nome_vendedor", "valor_sem_desconto",
+      "valor_com_desconto", "base_pre_desconto", "total_desconto_produtos",
+      "custo_total")).map(col) ++
+    Seq("desconto_pedido", "desconto_total", "valor_faturado", "valor_lucro")
+      .map(c => Exprs.r4(col(c)).as(c)): _*)
+
+  /** Display projection of the item grain (see [[pedidosFinal]]). */
+  def itensFinal(df: DataFrame, lineage: String*): DataFrame = df.select(
+    (lineage ++ Seq("pedido_id", "item_id", "produto_id", "pedido_dia",
+      "cliente_cpf", "categoria_principal", "categoria_secundaria",
+      "quantidade")).map(col) ++
+    Seq("valor_unitario", "valor_total", "desconto_unitario",
+      "desconto_produto", "desconto_alocado", "preco_custo", "custo_total",
+      "lucro_item").map(c => Exprs.r4(col(c)).as(c)): _*)
 
   /** itens_pedido: one row per matched line item with the unit/total metric
     * block (F8/F9) and pro-rata header-discount allocation (F7).
@@ -154,31 +219,19 @@ object FactsFromRaw {
     val it = pdv.select(col("id").as("pedido_id"), col("data").as("pedido_dia"),
       col("contato.cpfCnpj").as("cliente_cpf"),
       Exprs.parseDesconto(col("desconto"), col("totalVenda")).as("desconto_pedido"),
-      // integer-grid fold: order-independent, matches the oracle's grouped
-      // grid sum regardless of array vs row ordering
-      Exprs.gsumArray(col("itens"), i => iValor(i) * iQtd(i)).as("total_pre"),
+      totalPre(col("itens")).as("total_pre"),
       posexplode(col("itens")).as(Seq("pos", "item")))
+    val item = col("item")
     it.join(prod, col("item.idProduto") === col("idProduto"))         // inner: unmatched dropped
-      .withColumn("valor_total", valorUnit * qtd)
+      .withColumn("valor_total", iValor(item) * iQtd(item))
       .withColumn("share", col("valor_total") / col("total_pre"))
-      .select(
+      .select(Seq(
         col("pedido_id"), col("pedido_dia"), col("cliente_cpf"),
         col("item.id").as("item_id"),
         col("idProduto").as("produto_id"),
-        col("item.descricao").as("descricao"),
-        Exprs.categoriaPrincipal(col("categoria")).as("categoria_principal"),
-        Exprs.categoriaSecundaria(col("categoria")).as("categoria_secundaria"),
-        qtd.as("quantidade"),
-        valorUnit.as("valor_unitario"),
-        col("valor_total"),
-        descontoUnit.as("desconto_unitario"),
-        (descontoUnit * qtd).as("desconto_produto"),
-        (col("desconto_pedido") * col("share")).as("desconto_alocado"),
-        col("preco_custo"),
-        (col("preco_custo") * qtd).as("custo_total"),
-        (col("valor_total") - descontoUnit * qtd
-          - col("desconto_pedido") * col("share")
-          - col("preco_custo") * qtd).as("lucro_item"))
+        col("item.descricao").as("descricao")) ++
+        itemMetrics(item, col("categoria"), col("valor_total"), col("share"),
+          col("preco_custo")): _*)
   }
 
   /** pedidos: header grain. F2-F4 aggregate ALL items (pre-join); F1 cost
@@ -202,22 +255,20 @@ object FactsFromRaw {
     val prod = produto.select(col("id").as("idProduto"),
       col("preco_custo").cast("double").as("preco_custo"))
       .dropDuplicates("idProduto")
-    val it = pdv.select(col("id").as("pedido_id"), col("data").as("pedido_dia"),
+    val it = pdv.select(Seq(col("id").as("pedido_id"), col("data").as("pedido_dia"),
       col("contato.cpfCnpj").as("cliente_cpf"),
       col("formaPagamento").as("forma_pagamento"),
       col("totalVenda").as("valor_faturado"),
-      Exprs.parseDesconto(col("desconto"), col("totalVenda")).as("desconto_pedido"),
-      Exprs.gsumArray(col("itens"),
-        i => iValor(i) / (lit(1d) - iDPct(i) / 100)).as("valor_sem_desconto"), // per-unit quirk
-      Exprs.gsumArray(col("itens"), iValor).as("valor_com_desconto"),
-      Exprs.gsumArray(col("itens"), i => iValor(i) * iQtd(i)).as("base_pre_desconto"),
-      posexplode_outer(col("itens")).as(Seq("pos", "item")))
+      Exprs.parseDesconto(col("desconto"), col("totalVenda")).as("desconto_pedido")) ++
+      headerSums(col("itens")) :+
+      posexplode_outer(col("itens")).as(Seq("pos", "item")): _*)
     // C3/G3: first pesquisa row carries the vendedor
     val vendedor = pesquisa
       .groupBy(col("id").cast("long").as("pedido_id"))
       .agg(min(struct(col("id_vendedor"), col("nome_vendedor"))).as("v"))
       .select(col("pedido_id"), col("v.id_vendedor").as("vendedor_id"),
         col("v.nome_vendedor").as("nome_vendedor"))
+    val item = col("item")
     // The header-grain columns are group-constant (they ride the pre-explode
     // projection), so they go INTO the group key instead of through
     // `first()` aggregates: a string-buffered aggregate (first/min/max on
@@ -227,22 +278,19 @@ object FactsFromRaw {
     // (measured ~8 s → ~4 s on this query at sf0.1). Partitioning on
     // pedido_id from the upstream repartition still satisfies the clustered
     // distribution (subset of the keys), so no extra exchange appears.
-    it.join(prod, col("item.idProduto") === col("idProduto"), "left")
+    withTotals(it.join(prod, col("item.idProduto") === col("idProduto"), "left")
       .groupBy(col("pedido_id"), col("pedido_dia"), col("cliente_cpf"),
         col("forma_pagamento"), col("valor_faturado"), col("desconto_pedido"),
         col("valor_sem_desconto"), col("valor_com_desconto"),
         col("base_pre_desconto"))
       // F1/F5 matched-only: unmatched rows carry null preco_custo / are
       // guarded out, and grid-sum skips null terms
-      .agg(Exprs.gsum(col("preco_custo") * qtd).as("custo_total"),
-        Exprs.gsum(when(col("idProduto").isNotNull, descontoUnit * qtd))
+      .agg(Exprs.gsum(col("preco_custo") * iQtd(item)).as("custo_total"),
+        Exprs.gsum(when(col("idProduto").isNotNull, iDescUnit(item) * iQtd(item)))
           .as("total_desconto_produtos"))
       .join(vendedor, Seq("pedido_id"), "left")
       .withColumn("custo_total", coalesce(col("custo_total"), lit(0d)))
       .withColumn("total_desconto_produtos",
-        coalesce(col("total_desconto_produtos"), lit(0d)))
-      .withColumn("desconto_total",
-        col("total_desconto_produtos") + col("desconto_pedido"))
-      .withColumn("valor_lucro", col("valor_faturado") - col("custo_total")) // F10
+        coalesce(col("total_desconto_produtos"), lit(0d))))
   }
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.{Exprs, Tables}
+import graft.{Schemas, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Oracle-gated wrappers over the typed-nested path: fixture-shaped pdv /
   * produto / pesquisa JSON payloads are synthesized from the TPC-H tables
@@ -88,14 +89,6 @@ object Typed {
         lit("20240305T141000").as("file_ts"))
   }
 
-  /** pesquisa envelopes — paginated search results, ~n/64 orders per page
-    * payload, matching `gcs_to_bq/main.py:294-316`'s array-of-pedidos shape:
-    *  - orders with `o_orderkey % 7 == 0` are ABSENT (C3 left-join nulls);
-    *  - orders with `o_orderkey % 5 == 0` appear TWICE with different
-    *    vendedores (G3 first-match must pick deterministically);
-    *  - `data_prevista` is the empty string for `o_orderkey % 4 == 0`
-    *    (D8 empty→null at data scale);
-    *  - ids/vendedor ids are strings, as the pesquisa payload sends them. */
   /** One pesquisa search-result entry, from orders columns (ids as strings,
     * as the pesquisa payload sends them; empty `data_prevista` for
     * `o_orderkey % 4 == 0`). Shared with the message producer. */
@@ -109,12 +102,19 @@ object Typed {
     concat(lit("vend "), vendedorId.cast("string")).as("nome_vendedor"))
     .as("pedido"))
 
+  /** pesquisa envelopes — paginated search results, ~n/64 orders per page
+    * payload, matching `gcs_to_bq/main.py:294-316`'s array-of-pedidos shape:
+    *  - orders with `o_orderkey % 7 == 0` are ABSENT (C3 left-join nulls);
+    *  - orders with `o_orderkey % 5 == 0` appear TWICE with different
+    *    vendedores (G3 first-match must pick deterministically);
+    *  - `data_prevista` is the empty string for `o_orderkey % 4 == 0`
+    *    (D8 empty→null at data scale);
+    *  - ids/vendedor ids are strings, as the pesquisa payload sends them. */
   private def pesquisaRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    def entry(vendedorId: Column) = pesquisaEntry(vendedorId)
     val base = Tables.orders(spark, sfDir).filter(col("o_orderkey") % 7 =!= 0)
-    val rows = base.select(col("o_orderkey"), entry(col("o_custkey") % 100).as("p"))
+    val rows = base.select(col("o_orderkey"), pesquisaEntry(col("o_custkey") % 100).as("p"))
       .unionByName(base.filter(col("o_orderkey") % 5 === 0)
-        .select(col("o_orderkey"), entry(col("o_custkey") % 100 + 1).as("p")))
+        .select(col("o_orderkey"), pesquisaEntry(col("o_custkey") % 100 + 1).as("p")))
     rows.groupBy(pmod(col("o_orderkey"), lit(64)).as("page"))
       .agg(sort_array(collect_list(col("p"))).as("pedidos"))
       .select(to_json(struct(struct(
@@ -175,49 +175,18 @@ object Typed {
 
   /** Envelope schema pruned to the fields this fact build touches — the
     * parser skips the other ~70 subtrees (measured ~2× parse time). */
-  private val prunedPdvEnvelope: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("retorno", StructType(Seq(
-      StructField("status_processamento", StringType),
-      StructField("pedido", StructType(Seq(
-        StructField("id", LongType),
-        StructField("data", StringType),
-        StructField("desconto", StringType),
-        StructField("totalVenda", DoubleType),
-        StructField("formaPagamento", StringType),
-        StructField("contato", StructType(Seq(
-          StructField("cpfCnpj", StringType)))),
-        StructField("itens", ArrayType(StructType(Seq(
-          StructField("id", LongType),
-          StructField("idProduto", LongType),
-          StructField("descricao", StringType),
-          StructField("valor", StringType),
-          StructField("quantidade", StringType),
-          StructField("desconto", StringType)))))))))))))
-  }
+  private val prunedPdvEnvelope: StructType = Schemas.pdvPruned(
+    "id", "data", "desconto", "totalVenda", "formaPagamento", "contato.cpfCnpj",
+    "itens.id", "itens.idProduto", "itens.descricao", "itens.valor",
+    "itens.quantidade", "itens.desconto")
 
   /** [[prunedPdvEnvelope]] further narrowed for the ORDER-grain build:
     * [[FactsFromRaw.pedidos]] folds/joins on (idProduto, valor, quantidade,
     * desconto) only, so the parser also skips each item's `id` and
     * `descricao` tokens. */
-  private[graft] val prunedPdvEnvelopeHeader: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("retorno", StructType(Seq(
-      StructField("status_processamento", StringType),
-      StructField("pedido", StructType(Seq(
-        StructField("id", LongType),
-        StructField("data", StringType),
-        StructField("desconto", StringType),
-        StructField("totalVenda", DoubleType),
-        StructField("formaPagamento", StringType),
-        StructField("contato", StructType(Seq(
-          StructField("cpfCnpj", StringType)))),
-        StructField("itens", ArrayType(StructType(Seq(
-          StructField("idProduto", LongType),
-          StructField("valor", StringType),
-          StructField("quantidade", StringType),
-          StructField("desconto", StringType)))))))))))))
-  }
+  private[graft] val prunedPdvEnvelopeHeader: StructType = Schemas.pdvPruned(
+    "id", "data", "desconto", "totalVenda", "formaPagamento", "contato.cpfCnpj",
+    "itens.idProduto", "itens.valor", "itens.quantidade", "itens.desconto")
 
   /** Line-item fact through the full typed path. */
   def typedItensFact(spark: SparkSession, sfDir: String): DataFrame = {
@@ -229,20 +198,7 @@ object Typed {
     val pdv = RawTables.pdv(stagedPdvRaw(spark, sfDir), prunedPdvEnvelope)
       .repartition(col("id"))
     val produto = RawTables.produto(stagedProdutoRaw(spark, sfDir))
-    FactsFromRaw.itensPedido(pdv, produto)
-      .select(
-        col("pedido_id"), col("item_id"), col("produto_id"),
-        col("pedido_dia"), col("cliente_cpf"),
-        col("categoria_principal"), col("categoria_secundaria"),
-        col("quantidade"),
-        Exprs.r4(col("valor_unitario")).as("valor_unitario"),
-        Exprs.r4(col("valor_total")).as("valor_total"),
-        Exprs.r4(col("desconto_unitario")).as("desconto_unitario"),
-        Exprs.r4(col("desconto_produto")).as("desconto_produto"),
-        Exprs.r4(col("desconto_alocado")).as("desconto_alocado"),
-        Exprs.r4(col("preco_custo")).as("preco_custo"),
-        Exprs.r4(col("custo_total")).as("custo_total"),
-        Exprs.r4(col("lucro_item")).as("lucro_item"))
+    FactsFromRaw.itensFinal(FactsFromRaw.itensPedido(pdv, produto))
       .orderBy("pedido_id", "item_id", "produto_id", "quantidade", "valor_total")
   }
 
@@ -284,16 +240,7 @@ object Typed {
     val pesquisa = RawTables.pesquisa(stagedPesquisaRaw(spark, sfDir))
     val produto = RawTables.produto(stagedProdutoRaw(spark, sfDir))
       .filter(col("id") % 17 =!= 0)
-    FactsFromRaw.pedidos(pdv, pesquisa, produto)
-      .select(col("pedido_id"), col("pedido_dia"), col("cliente_cpf"),
-        col("forma_pagamento"), col("vendedor_id"), col("nome_vendedor"),
-        col("valor_sem_desconto"), col("valor_com_desconto"),
-        col("base_pre_desconto"), col("total_desconto_produtos"),
-        col("custo_total"),
-        Exprs.r4(col("desconto_pedido")).as("desconto_pedido"),
-        Exprs.r4(col("desconto_total")).as("desconto_total"),
-        Exprs.r4(col("valor_faturado")).as("valor_faturado"),
-        Exprs.r4(col("valor_lucro")).as("valor_lucro"))
+    FactsFromRaw.pedidosFinal(FactsFromRaw.pedidos(pdv, pesquisa, produto))
       .orderBy("pedido_id")
   }
 

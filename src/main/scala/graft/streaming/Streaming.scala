@@ -53,7 +53,7 @@ case class MediaSigFlag(doc_id: Long, b0: Long, b1: Long, b2: Long,
   * first eviction.
   *
   * CHECKPOINT COMPATIBILITY: this state schema has changed across
-  * releases (r13 added `evicted`/`bloom`; r14 added `bloomInserts`/
+  * releases (v2 added `evicted`/`bloom`; v3 added `bloomInserts`/
   * `bloomPrev`; the generation counter is
   * [[Streaming.QuadStateSchemaVersion]]). Starting a query from a
   * checkpoint written under an older schema fails FAST with the recovery
@@ -618,16 +618,30 @@ object Streaming {
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader = spark.readStream
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.text(s"$root/$topic/p*")
-      .select(
-        regexp_extract(col("_metadata.file_path"), "/p([0-9]+)/", 1)
-          .cast("int").as("partition"),
-        split(col("value"), "\t", 3).as("f"))
-      .select(col("partition"),
-        element_at(col("f"), 1).cast("long").as("offset"),
-        element_at(col("f"), 2).as("key"),
-        element_at(col("f"), 3).as("data"))
+    logRecords(reader.text(s"$root/$topic/p*"))
   }
+
+  /** Segment lines (`offset\tkey\tdata`) → (partition, offset, key, data). */
+  private def logRecords(lines: DataFrame): DataFrame = lines
+    .select(
+      regexp_extract(col("_metadata.file_path"), "/p([0-9]+)/", 1)
+        .cast("int").as("partition"),
+      split(col("value"), "\t", 3).as("f"))
+    .select(col("partition"),
+      element_at(col("f"), 1).cast("long").as("offset"),
+      element_at(col("f"), 2).as("key"),
+      element_at(col("f"), 3).as("data"))
+
+  /** Drain the topic's backlog as it stands (`Trigger.AvailableNow`),
+    * checkpointed at `checkpointDir`, running `apply` on each micro-batch. */
+  private def drain(spark: SparkSession, root: String, topic: String,
+      checkpointDir: String, maxFilesPerTrigger: Option[Int])(
+      apply: (DataFrame, Long) => Unit): StreamingQuery =
+    logStream(spark, root, topic, maxFilesPerTrigger).writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(apply)
+      .start()
 
   /** One micro-batch of the log consumer — the reference subscriber's
     * apply-then-ack shape (`gcs_to_bq/main.py:351-372`): decode the wire
@@ -689,13 +703,9 @@ object Streaming {
   def logConsume(spark: SparkSession, root: String, topic: String,
       group: String, appliedDir: String, checkpointDir: String,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
-    logStream(spark, root, topic, maxFilesPerTrigger).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        logApplyBatch(b, root, topic, group, appliedDir)
-      }
-      .start()
+    drain(spark, root, topic, checkpointDir, maxFilesPerTrigger) { (b, _) =>
+      logApplyBatch(b, root, topic, group, appliedDir)
+    }
 
   /** One micro-batch of the SECOND log subscriber — the reference's fact
     * builder (`data_transformation/sales_to_bq/main.py:318-365`): decode
@@ -803,13 +813,9 @@ object Streaming {
       group: String, pedidosDir: String, itensDir: String,
       checkpointDir: String,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
-    logStream(spark, root, topic, maxFilesPerTrigger).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        factApplyBatch(b, id, pedidosDir, itensDir, root, topic, group)
-      }
-      .start()
+    drain(spark, root, topic, checkpointDir, maxFilesPerTrigger) { (b, id) =>
+      factApplyBatch(b, id, pedidosDir, itensDir, root, topic, group)
+    }
 
   /** One micro-batch of the STREAMING impact-index ingest — the
     * retrieval family's third symmetry leg (batch build →
@@ -822,7 +828,7 @@ object Streaming {
     * additive stat advance), landing generation `batchId` as
     * `gen=<id>/{prefix,termstats}` via the shared
     * [[graft.operators.GenerationChain]]. Exactly-once: a generation is
-    * published by ONE whole-generation atomic rename (never the r15
+    * published by ONE whole-generation atomic rename (never a
     * mode-overwrite pair a concurrent latest-complete reader could catch
     * mid-rewrite), an engine redelivery of an already-complete `gen=id`
     * SHORT-CIRCUITS to re-acking its offsets (generations are immutable
@@ -875,14 +881,10 @@ object Streaming {
       group: String, indexDir: String, checkpointDir: String,
       maxFilesPerTrigger: Option[Int] = None, k1: Double = 1.2,
       b: Double = 0.75, cap: Int = 64, retain: Int = 3): StreamingQuery =
-    logStream(spark, root, topic, maxFilesPerTrigger).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        indexApplyBatch(batch, id, indexDir, root, topic, group, k1, b,
-          cap, retain)
-      }
-      .start()
+    drain(spark, root, topic, checkpointDir, maxFilesPerTrigger) { (batch, id) =>
+      indexApplyBatch(batch, id, indexDir, root, topic, group, k1, b,
+        cap, retain)
+    }
 
   /** The whole topic as ONE batch frame — the same parse as [[logStream]]
     * over `spark.read` instead of `readStream` (segment files are
@@ -890,15 +892,7 @@ object Streaming {
     * consistent prefix of the log). The compaction rebuild reads this:
     * everything the stream has ever ingested, straight from the log. */
   def logBatch(spark: SparkSession, root: String, topic: String): DataFrame =
-    spark.read.text(s"$root/$topic/p*")
-      .select(
-        regexp_extract(col("_metadata.file_path"), "/p([0-9]+)/", 1)
-          .cast("int").as("partition"),
-        split(col("value"), "\t", 3).as("f"))
-      .select(col("partition"),
-        element_at(col("f"), 1).cast("long").as("offset"),
-        element_at(col("f"), 2).as("key"),
-        element_at(col("f"), 3).as("data"))
+    logRecords(spark.read.text(s"$root/$topic/p*"))
 
   private def topicDocs(spark: SparkSession, root: String,
       topic: String): DataFrame =
@@ -1271,7 +1265,7 @@ object Streaming {
   val DefaultBucketBudget = 4096
 
   /** Version of the [[BucketQuads]] state encoding. History: v1 = sigs
-    * only; v2 (r13) added evicted/bloom; v3 (r14) added bloomInserts/
+    * only; v2 added evicted/bloom; v3 added bloomInserts/
     * bloomPrev. Bump on EVERY field change. */
   val QuadStateSchemaVersion = 3
 
@@ -1279,7 +1273,7 @@ object Streaming {
     * checkpoint written under a different [[BucketQuads]] schema
     * generation: without this, Spark's state-store compatibility check
     * surfaces the break as a raw encoder error mid-batch (or worse,
-    * a pre-r13 checkpoint decodes garbage). A marker file in the
+    * a v1 checkpoint decodes garbage). A marker file in the
     * checkpoint dir records the schema version at first start; a version
     * mismatch — or a pre-existing checkpoint with no marker, which can
     * only be an older generation — throws with the exact recovery step.

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{FactsFromRaw, RawTables}
+import graft.operators.{FactsFromRaw, Messages, RawTables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -99,6 +99,34 @@ class RawTablesSpec extends SparkSuite {
     assert(math.abs(r.getAs[Double]("valor_lucro") - 29.0) < 1e-9)
     assert(r.getAs[String]("nome_vendedor") == "Bruno Lima")
     assert(r.getAs[String]("vendedor_id") == "7")
+  }
+
+  test("typed and message fact builds agree on an order with a complete catalog") {
+    val catalog = produtoJsons :+
+      """{"retorno":{"status_processamento":"3","produto":{"id":333,"nome":"Fantasma","preco":20.0,"preco_custo":"12.50","categoria":"Outros >> Diversos"}}}"""
+    val message = s"""{"pdv_pedido_data":$pdvJson,"produto_data":[${catalog.mkString(",")}],""" +
+      s""""pedidos_pesquisa_data":$pesquisaJson,"nota_fiscal_link_data":{"link_nfce":"nfce-1"},""" +
+      """"timestamp":"20240305T141000","uuid":"msg-1"}"""
+    val wire = Seq(java.util.Base64.getEncoder.encodeToString(
+      message.getBytes("UTF-8"))).toDF("data")
+    val msg = Messages.decodeForFacts(wire)
+    val produtoAll = RawTables.produto(rawDf(catalog: _*))
+    def assertSame(typed: DataFrame, fromMessage: DataFrame, key: String,
+        expected: Seq[String]): Unit = {
+      val shared = typed.columns.filter(fromMessage.columns.contains).toSeq
+      assert(shared == expected)
+      val a = typed.select(shared.map(col): _*).orderBy(key).collect().toSeq
+      val b = fromMessage.select(shared.map(col): _*).orderBy(key).collect().toSeq
+      assert(a.nonEmpty)
+      assert(a == b)
+    }
+    val typedItens = FactsFromRaw.itensPedido(pdv, produtoAll)
+    assertSame(typedItens, Messages.itensFactOf(msg), "item_id",
+      typedItens.columns.filterNot(_ == "descricao").toSeq)
+    assert(typedItens.count() == 3) // every item matched
+    val typedPedidos = FactsFromRaw.pedidos(pdv, pesquisa, produtoAll)
+    assertSame(typedPedidos, Messages.pedidosFactOf(msg), "pedido_id",
+      typedPedidos.columns.toSeq)
   }
 
   test("envelope status gate: non-'3' payloads are filtered out (B3)") {
