@@ -63,14 +63,13 @@ object Exprs {
     * identical exchange subtrees get reused). */
   def gsumArray(arr: Column, f: Column => Column, scale: Double = 1e4): Column =
     aggregate(
-      arr,
+      // grid terms first, so the fold reads each element's term as one
+      // lambda variable — `f` is evaluated once per element, not twice
+      transform(arr, x => floor(f(x) * lit(scale) + lit(0.5d)).cast("long")),
       struct(lit(0L).as("s"), lit(0L).as("n")),
-      (a, x) => {
-        val term = floor(f(x) * lit(scale) + lit(0.5d)).cast("long")
-        struct(
-          (a.getField("s") + coalesce(term, lit(0L))).as("s"),
-          (a.getField("n") + when(term.isNotNull, lit(1L)).otherwise(lit(0L))).as("n"))
-      },
+      (a, term) => struct(
+        (a.getField("s") + coalesce(term, lit(0L))).as("s"),
+        (a.getField("n") + when(term.isNotNull, lit(1L)).otherwise(lit(0L))).as("n")),
       a => when(a.getField("n") > 0, a.getField("s").cast("double") / lit(scale)))
 
   /** Portable 32-bit numeric hash: first 8 hex chars of md5, as a long in

@@ -17,20 +17,13 @@ object Verify {
     // oracle gate would compare stale-but-matching results — a false green.
     // After the delete, any failure leaves no directory and the gate reports
     // the query missing, which is loud.
-    def rmTree(dir: java.nio.file.Path): Unit =
-      if (Files.exists(dir)) {
-        val walk = Files.walk(dir)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-        finally walk.close()
-      }
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       // the delete shares the per-query try: one query's IO hiccup must
       // cost that query's dump, not every remaining query's
       try {
-        rmTree(Paths.get(s"$outDir/$name"))
+        operators.Staged.rmTree(new java.io.File(s"$outDir/$name"))
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       } catch { case e: Throwable =>

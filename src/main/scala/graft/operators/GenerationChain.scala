@@ -1,28 +1,24 @@
 package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.io.File
-import java.nio.file.{Files, StandardCopyOption}
 
 /** ONE code path for every write-back generation chain in the engine —
   * the batch impact-index chain (`TextOps.stagedImpactGen`), the batch
   * graph chain (`Similarity.stagedGraphGen`), and the streaming index
-  * ingest (`Streaming.indexApplyBatch`) previously kept generations
-  * under two conventions (content-keyed [[Staged]] dirs vs raw
-  * mode-overwrite `gen=<id>` dirs), which meant retention and the
-  * drift→compaction policy would each have been implemented twice.
+  * ingest (`Streaming.indexApplyBatch`) — so retention and the
+  * drift→compaction policy are implemented once.
   *
   * A chain lives under one `root` directory and holds immutable
   * generations `gen=<id>/{table…}`. The contract:
   *
-  *  - '''Whole-generation atomicity.''' Every table of a generation is
-  *    written to one scratch dir first, then a SINGLE `ATOMIC_MOVE`
-  *    publishes the whole generation — strictly stronger than the
-  *    per-table rename pair it replaces (a crash can no longer land
-  *    between two renames; a generation either does not exist or is
-  *    complete with every table's `_SUCCESS`). A reader doing the
-  *    latest-complete scan can never observe a generation deleted or
-  *    half-written mid-publish (the r15 streaming chain's mode-overwrite
-  *    writes could be caught mid-rewrite by a concurrent reader).
+  *  - '''Whole-generation atomicity.''' A generation is published by
+  *    [[Staged]]'s one write-once protocol ([[Staged.publishOnce]]):
+  *    every table lands in one scratch dir under `root/_tmp`, then a
+  *    single rename publishes the whole generation, so it either does
+  *    not exist or is complete with every table's `_SUCCESS`. A reader
+  *    doing the latest-complete scan can never observe a generation
+  *    deleted or half-written mid-publish (mode-overwrite writes in
+  *    place could be caught mid-rewrite by a concurrent reader).
   *  - '''Immutability + redelivery.''' [[getOrPublish]] short-circuits
   *    when the generation is already complete — a redelivered streaming
   *    micro-batch re-acks and returns instead of re-overwriting a
@@ -36,22 +32,13 @@ import java.nio.file.{Files, StandardCopyOption}
   *    per micro-batch forever (~1,440/day at one batch a minute).
   *  - '''Bounded discovery.''' [[list]] is one directory listing, not
   *    the O(batches) `batchId-1 .. 0` existence probe the stream ran
-  *    per batch.
-  *
-  * Races follow [[Staged]]'s discipline: when two builders publish the
-  * same generation, the first rename wins and the loser discards its
-  * scratch and reads the winner; a complete-but-corrupt generation is
-  * impossible to publish (the move requires every table's `_SUCCESS` in
-  * scratch) and a legacy incomplete target is cleared before the move. */
+  *    per batch. */
 final class GenerationChain(val root: String, val tables: Seq[String]) {
   require(tables.nonEmpty, "a generation chain needs at least one table")
 
   private def genDir(id: Long) = new File(s"$root/gen=$id")
 
-  private def completeIn(d: File): Boolean =
-    tables.forall(t => new File(d, s"$t/_SUCCESS").exists())
-
-  def complete(id: Long): Boolean = completeIn(genDir(id))
+  def complete(id: Long): Boolean = Staged.complete(genDir(id), tables)
 
   def tablePath(id: Long, table: String): String = {
     require(tables.contains(table), s"unknown chain table $table")
@@ -81,31 +68,11 @@ final class GenerationChain(val root: String, val tables: Seq[String]) {
 
   /** Build-if-absent: when generation `id` is already complete this is
     * a no-op returning false (the redelivery short-circuit); otherwise
-    * `build` must yield one DataFrame per [[tables]] entry (same order),
-    * all land in scratch, and one atomic rename publishes the whole
-    * generation. Returns true when THIS call published. */
-  def getOrPublish(id: Long)(build: => Seq[DataFrame]): Boolean = {
-    val target = genDir(id)
-    if (completeIn(target)) return false
-    System.err.println(s"[graft] publishing $root gen=$id (first use)")
-    val frames = build
-    require(frames.size == tables.size,
-      s"chain $root: build yielded ${frames.size} frames for ${tables.size} tables")
-    val tmp = new File(s"$root/_tmp/${java.util.UUID.randomUUID()}")
-    tmp.mkdirs()
-    tables.zip(frames).foreach { case (t, df) =>
-      df.write.mode("overwrite").parquet(s"$tmp/$t")
-    }
-    require(completeIn(tmp), s"chain build left an incomplete scratch in $tmp")
-    // a legacy/corrupt target (exists but incomplete) blocks the rename
-    if (target.exists() && !completeIn(target)) rmTree(target)
-    try Files.move(tmp.toPath, target.toPath, StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileSystemException if completeIn(target) =>
-      rmTree(tmp) // lost the publish race — the winner's generation is whole
-    }
-    require(completeIn(target), s"generation publish failed for $target")
-    true
-  }
+    * `build` must yield one DataFrame per [[tables]] entry (same order)
+    * and the whole generation is published at once. Returns true when
+    * THIS call published. */
+  def getOrPublish(id: Long)(build: => Seq[DataFrame]): Boolean =
+    Staged.publishOnce(genDir(id), root, tables, s"publishing $root gen=$id")(build)
 
   /** Delete all but the newest `keepLast` complete generations (plus any
     * ids in `pin` — e.g. a compaction marker). Returns the retired ids.
@@ -116,17 +83,9 @@ final class GenerationChain(val root: String, val tables: Seq[String]) {
     require(keepLast >= 1, "retention must keep at least the newest generation")
     val ids = list()
     val retired = ids.dropRight(keepLast).filterNot(pin)
-    retired.foreach(id => rmTree(genDir(id)))
+    retired.foreach(id => Staged.rmTree(genDir(id)))
     retired
   }
-
-  private def rmTree(d: File): Unit =
-    if (d.exists()) {
-      val walk = Files.walk(d.toPath)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
-    }
 }
 
 object GenerationChain {

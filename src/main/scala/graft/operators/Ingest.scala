@@ -90,10 +90,7 @@ object Ingest {
           stream.filter(_.toString.endsWith(ext)).count() == nFiles
       } finally stream.close()
       if (complete) return
-      val walk = Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
+      Staged.rmTree(root.toFile)
     }
     Files.createDirectories(root)
     write(root)
@@ -227,10 +224,7 @@ object Ingest {
         val part = try stream.filter(_.toString.endsWith(".parquet"))
           .findFirst().get() finally stream.close()
         Files.move(part, root.resolve(name))
-        val walk = Files.walk(Paths.get(tmp))
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-        finally walk.close()
+        Staged.rmTree(new java.io.File(tmp))
       }
       // content is a pure function of the row index — sf-independent
       writeOne((0L until 300L).map(i => (i, (i % 7).toInt, i * 137 + 11))

@@ -298,15 +298,15 @@ object Messages {
     val ped = col("pdv_pedido_data.retorno.pedido")
     val itens = ped.getField("itens")
     val pd = col("produto_data")
-    val pesquisa = "pedidos_pesquisa_data"
+    val vend = firstVendedor("pedidos_pesquisa_data")
     FactsFromRaw.withTotals(msg.select(Seq(
       col("uuid").as("msg_uuid"),
       ped.getField("id").as("pedido_id"),
       Exprs.brDate(ped.getField("data")).as("pedido_dia"),
       ped.getField("contato").getField("cpfCnpj").as("cliente_cpf"),
       ped.getField("formaPagamento").as("forma_pagamento"),
-      firstVendedor(pesquisa).getField("id_vendedor").as("vendedor_id"),
-      firstVendedor(pesquisa).getField("nome_vendedor").as("nome_vendedor")) ++
+      vend.getField("id_vendedor").as("vendedor_id"),
+      vend.getField("nome_vendedor").as("nome_vendedor")) ++
       FactsFromRaw.headerSums(itens) ++ Seq(
         // F1/F5 matched-only: an unmatched item's term is null, skipped
         coalesce(Exprs.gsumArray(itens, i =>

@@ -703,7 +703,7 @@ object Similarity {
       m: Int, k: Int, iters: Int)(
       emb: => DataFrame): (DataFrame, DataFrame) = {
     val key = s"pq_v1/${Staged.dirKey(sfDir)}_${variant}_m${m}_k${k}_i$iters"
-    Staged.parquetPair(spark, s"$key/books", s"$key/codes") {
+    Staged.parquetPair(spark, key, "books", "codes") {
       val (books, codes, _) = pqTrainEncodeOf(emb, m, k, iters)
       (books, codes)
     }

@@ -18,15 +18,21 @@ import java.nio.file.{Files, StandardCopyOption}
   * the old stage instead of silently serving the previous corpus's
   * index, and any logic drift lands in a fresh directory.
   *
-  * Visibility is ATOMIC: a build writes to a scratch dir under the same
-  * root and renames into place (one `ATOMIC_MOVE` per table), so a
-  * staged dir either doesn't exist or is complete-with-`_SUCCESS` — a
-  * reader can never observe a half-overwritten table, a crashed build
-  * leaves only scratch garbage, and when two sessions race the first
-  * rename wins and the loser discards its scratch and reads the winner.
-  * Correctness stays oracle-guarded on top of all this: the DuckDB twin
-  * replays the BUILD from the base tables, so a corrupt staged table
-  * fails the gate loudly instead of silently serving.
+  * Every build-once artifact — a staged table, a staged pair, and each
+  * [[GenerationChain]] generation — is published by ONE write-once
+  * protocol, [[publishOnce]]: every table is built into one scratch dir
+  * under the same root, each table's `_SUCCESS` is required, an
+  * incomplete leftover target is cleared, and a single `ATOMIC_MOVE`
+  * publishes the whole target. A target therefore either doesn't exist
+  * or holds every table complete-with-`_SUCCESS` — a reader can never
+  * observe a half-overwritten table or a new table beside an old one, a
+  * crashed build leaves only scratch garbage, and when two sessions race
+  * the first rename wins and the loser discards its scratch and reads
+  * the winner. That `_SUCCESS` check is the reuse rule: a prior result
+  * is served only while it holds. Correctness stays oracle-guarded on
+  * top of all this: the DuckDB twin replays the BUILD from the base
+  * tables, so a corrupt staged table fails the gate loudly instead of
+  * silently serving.
   *
   * The root lives UNDER THE REPO (`tmpdata/graft_staged`, gitignored) —
   * not world-writable /tmp where another user or branch could poison a
@@ -39,25 +45,51 @@ object Staged {
   private[operators] def root: String =
     sys.env.getOrElse("GRAFT_STAGED_ROOT", "tmpdata/graft_staged")
 
-  private def complete(d: File) = new File(d, "_SUCCESS").exists()
+  /** Where table `t` of a target lives; "" names the target itself (a
+    * single-table stage keeps its parquet files directly in its dir). */
+  private def tableDir(d: File, t: String): File =
+    if (t.isEmpty) d else new File(d, t)
 
-  /** Atomically publish a freshly-built scratch dir at `target`. Returns
-    * normally if `target` is complete afterwards, whether this session's
-    * rename won or a concurrent builder's did. */
-  private def publish(tmp: File, target: File): Unit = {
-    require(complete(tmp), s"build left no _SUCCESS in $tmp")
-    // a legacy/corrupt target (exists but incomplete) blocks the rename —
-    // clear it; completeness can only be observed through `complete`
-    if (target.exists() && !complete(target)) rmTree(target)
+  /** The validity condition of every build-once artifact: each table of
+    * `tables` under `d` carries its `_SUCCESS`. */
+  private[operators] def complete(d: File, tables: Seq[String]): Boolean =
+    tables.forall(t => new File(tableDir(d, t), "_SUCCESS").exists())
+
+  /** The write-once publish: a no-op returning false when `target` is
+    * already complete; otherwise `build` yields one frame per `tables`
+    * entry (same order), all land in one scratch dir under
+    * `$scratchRoot/_tmp`, and one atomic rename publishes the whole
+    * target. Returns true when THIS call published; when a concurrent
+    * builder's rename won, its complete target stands and this call's
+    * scratch is discarded. */
+  private[operators] def publishOnce(target: File, scratchRoot: String,
+      tables: Seq[String], what: String)(build: => Seq[DataFrame]): Boolean = {
+    if (complete(target, tables)) return false
+    System.err.println(s"[graft] $what (first use — later reads are free)")
+    val frames = build
+    require(frames.size == tables.size,
+      s"$target: build yielded ${frames.size} frames for ${tables.size} tables")
+    val tmp = new File(s"$scratchRoot/_tmp/${java.util.UUID.randomUUID()}")
+    tmp.getParentFile.mkdirs()
+    tables.zip(frames).foreach { case (t, df) =>
+      df.write.mode("overwrite").parquet(tableDir(tmp, t).toString)
+    }
+    require(complete(tmp, tables), s"build left no _SUCCESS in $tmp")
+    // a legacy/corrupt target (exists but incomplete — e.g. one table of
+    // a multi-table stage) blocks the rename: clear it; completeness can
+    // only be observed through `complete`
+    if (target.exists() && !complete(target, tables)) rmTree(target)
     target.getParentFile.mkdirs()
     try Files.move(tmp.toPath, target.toPath, StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileSystemException if complete(target) =>
+    catch { case _: java.nio.file.FileSystemException if complete(target, tables) =>
       rmTree(tmp) // lost the race to a concurrent builder — theirs is whole
     }
-    require(complete(target), s"staged publish failed for $target")
+    require(complete(target, tables), s"publish failed for $target")
+    true
   }
 
-  private def rmTree(d: File): Unit =
+  /** Delete `d` and everything under it; absent `d` is a no-op. */
+  private[graft] def rmTree(d: File): Unit =
     if (d.exists()) {
       val walk = Files.walk(d.toPath)
       try walk.sorted(java.util.Comparator.reverseOrder())
@@ -65,65 +97,35 @@ object Staged {
       finally walk.close()
     }
 
-  private def scratch(): File = {
-    val t = new File(s"$root/_tmp/${java.util.UUID.randomUUID()}")
-    t.getParentFile.mkdirs()
-    t
+  private def keyDir(key: String): File = {
+    require(!key.contains(".."), s"staging key escapes the root: $key")
+    new File(s"$root/$key")
   }
 
   /** `key` path-safe segments, e.g. "ann_graph_v1/sf0.01_q7_k5_b100_r2".
     * `build` runs at most once per (key, source-content) per filesystem
     * lifetime. */
   def parquet(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    require(!key.contains(".."), s"staging key escapes the root: $key")
-    val dir = new File(s"$root/$key")
-    if (!complete(dir)) {
-      System.err.println(s"[graft] staging $key (first use — later reads are free)")
-      val tmp = scratch()
-      build.write.mode("overwrite").parquet(tmp.toString)
-      publish(tmp, dir)
-    }
+    val dir = keyDir(key)
+    publishOnce(dir, root, Seq(""), s"staging $key")(Seq(build))
     spark.read.parquet(dir.toString)
   }
 
   /** Two tables built by ONE computation (e.g. PQ codebooks + the codes
-    * encoded with them): if either staged dir is incomplete the pair is
-    * rebuilt and both are written — staging them independently would run
-    * the shared training twice on a cold start. Both tables land in
-    * scratch FIRST, then two back-to-back atomic renames publish them,
-    * so no reader can pair a new A with an old-or-absent B: a stale B at
-    * publish time is cleared before A appears (the pair's dirs are
-    * re-keyed together, so "A fresh, B one-generation stale" cannot
-    * arise from key drift either — only from a crash BETWEEN the two
-    * renames, and that window leaves B absent, which re-runs the build,
-    * never a mismatched read). */
-  def parquetPair(spark: SparkSession, keyA: String, keyB: String)(
+    * encoded with them), staged as `$key/{a,b}`: if either is incomplete
+    * the pair is rebuilt and both are written — staging them
+    * independently would run the shared training twice on a cold start.
+    * The pair is one target, so no reader can pair a new A with an old
+    * or absent B: the Lloyd chain's double-accumulation order is not
+    * bit-deterministic, so a rebuilt A need not match an older B. */
+  def parquetPair(spark: SparkSession, key: String, a: String, b: String)(
       build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
-    require(!keyA.contains("..") && !keyB.contains(".."),
-      s"staging key escapes the root: $keyA / $keyB")
-    val dirA = new File(s"$root/$keyA")
-    val dirB = new File(s"$root/$keyB")
-    if (!complete(dirA) || !complete(dirB)) {
-      System.err.println(s"[graft] staging pair $keyA + $keyB (first use)")
-      val (a, b) = build
-      val (tmpA, tmpB) = (scratch(), scratch())
-      a.write.mode("overwrite").parquet(tmpA.toString)
-      b.write.mode("overwrite").parquet(tmpB.toString)
-      // clear BOTH stale halves BEFORE either rename. B first is the
-      // reader-visibility argument (between the two moves a reader may see
-      // A-complete + B-absent, which rebuilds — never A-new + B-old). A
-      // must ALSO be cleared: entering this branch with A complete means a
-      // previous build crashed between its two renames, and publish()'s
-      // race-loser path would otherwise KEEP that old A (rename fails,
-      // tmp discarded) while publishing the rebuild's B — a mismatched
-      // pair unless the builder is bit-deterministic, which the Lloyd
-      // chain's double-accumulation order does not guarantee.
-      if (complete(dirB)) rmTree(dirB)
-      if (complete(dirA)) rmTree(dirA)
-      publish(tmpA, dirA)
-      publish(tmpB, dirB)
+    val dir = keyDir(key)
+    publishOnce(dir, root, Seq(a, b), s"staging $key") {
+      val (da, db) = build
+      Seq(da, db)
     }
-    (spark.read.parquet(dirA.toString), spark.read.parquet(dirB.toString))
+    (spark.read.parquet(s"$dir/$a"), spark.read.parquet(s"$dir/$b"))
   }
 
   /** A source dir as a key segment: a human-readable flattened prefix

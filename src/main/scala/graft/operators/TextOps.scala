@@ -874,7 +874,7 @@ object TextOps {
       k1: Double, b: Double, cap: Int): (DataFrame, DataFrame) = {
     val key = s"bm25_impact_v2/${Staged.dirKey(sfDir)}" +
       s"_base_c${cap}_k1${k1}_b$b"
-    Staged.parquetPair(spark, s"$key/prefix", s"$key/termstats") {
+    Staged.parquetPair(spark, key, "prefix", "termstats") {
       val w = split(col("text"), " ")
       val docs = Tables.documents(spark, sfDir)
         .filter(pmod(col("doc_id"), lit(10L)) =!= 9)

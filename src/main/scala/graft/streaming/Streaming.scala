@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Staged
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -274,12 +275,6 @@ object Streaming {
     val spark = batch.sparkSession
     val live = Paths.get(tableDir)
     val old = Paths.get(tableDir + "._old")
-    def rmTree(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
     // heal crash windows on entry. No live + old set aside = death between
     // the two renames → restore. Live AND old = death after the swap but
     // before (or during) the old-dir cleanup → live is the complete new
@@ -287,7 +282,7 @@ object Streaming {
     // rename-aside hits a non-empty ._old and fails every epoch forever.
     if (!Files.exists(live) && Files.exists(old))
       Files.move(old, live, StandardCopyOption.ATOMIC_MOVE)
-    else rmTree(old)
+    else Staged.rmTree(old.toFile)
     val manifest = live.resolve("_BATCH")
     val applied =
       if (Files.isRegularFile(manifest)) Files.readString(manifest).trim.toLong
@@ -312,7 +307,7 @@ object Streaming {
     Files.writeString(Paths.get(scratch).resolve("_BATCH"), epoch.toString)
     if (Files.exists(live)) Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(scratch), live, StandardCopyOption.ATOMIC_MOVE)
-    rmTree(old)
+    Staged.rmTree(old.toFile)
   }
 
   /** Batch replay of [[incrementalRollup]]'s maintenance path, as an
@@ -642,6 +637,21 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .foreachBatch(apply)
       .start()
+
+  /** Drain `stream` as it stands (`Trigger.AvailableNow`), checkpointed at
+    * `checkpointDir`, writing micro-batch `id` to `$outDir/ingest_batch=<id>`
+    * in overwrite mode, so a re-executed micro-batch is idempotent. */
+  private def batchKeyedSink[T](stream: Dataset[T], outDir: String,
+      checkpointDir: String, mode: OutputMode = OutputMode.Append()): StreamingQuery = {
+    val write: (Dataset[T], Long) => Unit = (batch, batchId) =>
+      batch.write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(write)
+      .start()
+  }
 
   /** One micro-batch of the log consumer — the reference subscriber's
     * apply-then-ack shape (`gcs_to_bq/main.py:351-372`): decode the wire
@@ -985,15 +995,7 @@ object Streaming {
     * dirs make re-executed micro-batches idempotent, like the other sinks. */
   def bloomDedupQuery(events: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    bloomDedupStream(events).toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .start()
+    batchKeyedSink(bloomDedupStream(events).toDF(), outDir, checkpointDir)
 
   /** Streaming NEAR-dup detection — the in-stream counterpart of the batch
     * dedup family (`operators.Dedup`): every arriving document is checked
@@ -1049,15 +1051,7 @@ object Streaming {
     * make re-executed micro-batches idempotent, like the other sinks. */
   def nearDupQuery(docs: DataFrame, outDir: String,
     checkpointDir: String, maxHamming: Int = 3): StreamingQuery =
-    nearDupStream(docs, maxHamming).writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[NearDupFlag], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .start()
+    batchKeyedSink(nearDupStream(docs, maxHamming), outDir, checkpointDir)
 
   /** Streaming MEDIA near-dup — the in-stream counterpart of the batch
     * perceptual-hash family ([[graft.operators.Multimodal.imageDedup]]):
@@ -1312,15 +1306,8 @@ object Streaming {
       maxHamming: Int = graft.operators.Multimodal.DefaultMaxHamming,
       maxQuadsPerBucket: Int = DefaultBucketBudget): StreamingQuery = {
     guardQuadStateSchema(checkpointDir)
-    mediaDedupStream(docs, maxHamming, maxQuadsPerBucket).writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[MediaSigFlag], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .start()
+    batchKeyedSink(mediaDedupStream(docs, maxHamming, maxQuadsPerBucket),
+      outDir, checkpointDir)
   }
 
   /** MIXED-MIME streaming media near-dup — [[mediaDedupStream]] composed
@@ -1416,15 +1403,8 @@ object Streaming {
       maxHamming: Int = graft.operators.Multimodal.DefaultMaxHamming,
       maxQuadsPerBucket: Int = DefaultBucketBudget): StreamingQuery = {
     guardQuadStateSchema(checkpointDir)
-    mixedMediaDedupStream(docs, maxHamming, maxQuadsPerBucket).writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[MixedSigFlag], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .start()
+    batchKeyedSink(mixedMediaDedupStream(docs, maxHamming, maxQuadsPerBucket),
+      outDir, checkpointDir)
   }
 
   /** The funnel state machine ([[graft.operators.EventsOps.eventsFunnel]])
@@ -1485,15 +1465,7 @@ object Streaming {
     * micro-batch emits the refreshed position of every touched user). */
   def funnelQuery(events: DataFrame, outDir: String,
     checkpointDir: String): StreamingQuery =
-    funnelStream(events).writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[FunnelUpdate], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .start()
+    batchKeyedSink(funnelStream(events), outDir, checkpointDir, OutputMode.Update())
 
   /** Streaming gap-sessionization — the live form of the batch
     * [[graft.operators.EventsOps.eventsSession]] (same 30-minute gap, same
@@ -1602,15 +1574,7 @@ object Streaming {
     * inner stream-stream joins emit eagerly). */
   def attributionQuery(events: DataFrame, outDir: String,
       checkpointDir: String, horizon: String = "10 minutes"): StreamingQuery =
-    attributionJoin(events, horizon).writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .start()
+    batchKeyedSink(attributionJoin(events, horizon), outDir, checkpointDir)
 
   /** I6 — watermarked tumbling-window aggregation over the event stream;
     * append mode emits each window once, when the watermark passes it. */

@@ -458,4 +458,54 @@ class ScaleSpec extends SparkSuite {
       sys.env.getOrElse("GRAFT_STAGED_ROOT", "tmpdata/graft_staged"), key)
     assert(!target.exists(), "failed build left a reader-visible target dir")
   }
+
+  private def stagedDir(key: String) = new java.io.File(
+    sys.env.getOrElse("GRAFT_STAGED_ROOT", "tmpdata/graft_staged"), key)
+
+  test("Staged pair: a failed build publishes nothing; a retry publishes both tables") {
+    import org.apache.spark.sql.functions.{col, lit, when, raise_error, concat}
+    val key = s"spec_pair/${java.util.UUID.randomUUID()}"
+    intercept[Exception] {
+      operators.Staged.parquetPair(spark, key, "a", "b") {
+        (spark.range(3).toDF("x"), spark.range(10).select(
+          when(col("id") < 5, col("id"))
+            .otherwise(raise_error(concat(lit("boom "),
+              col("id").cast("string")))).as("x")))
+      }
+    }
+    assert(!stagedDir(key).exists(), "failed pair build left a reader-visible dir")
+    val (a, b) = operators.Staged.parquetPair(spark, key, "a", "b") {
+      (spark.range(3).toDF("x"), spark.range(5).toDF("x"))
+    }
+    assert(a.count() == 3 && b.count() == 5)
+    assert(Seq("a", "b").forall(t => new java.io.File(stagedDir(key), s"$t/_SUCCESS").exists()))
+  }
+
+  test("Staged pair: a half-pair left on disk is rebuilt as a matched pair") {
+    // `$key/a` complete, `$key/b` absent: what a crash between two
+    // per-table renames used to leave behind
+    val key = s"spec_pair/${java.util.UUID.randomUUID()}"
+    spark.range(99).toDF("x").write.parquet(s"${stagedDir(key)}/a")
+    var builds = 0
+    val (a, b) = operators.Staged.parquetPair(spark, key, "a", "b") {
+      builds += 1
+      (spark.range(3).toDF("x"), spark.range(5).toDF("x"))
+    }
+    assert(builds == 1, "a half-pair must rebuild")
+    assert(a.count() == 3 && b.count() == 5, "the stale half survived the rebuild")
+  }
+
+  test("Staged: a pair and a single table in the on-disk layout are hits") {
+    val key = s"spec_layout/${java.util.UUID.randomUUID()}"
+    spark.range(3).toDF("x").write.parquet(s"${stagedDir(key)}/pair/a")
+    spark.range(5).toDF("x").write.parquet(s"${stagedDir(key)}/pair/b")
+    spark.range(7).toDF("x").write.parquet(s"${stagedDir(key)}/single")
+    val (a, b) = operators.Staged.parquetPair(spark, s"$key/pair", "a", "b") {
+      fail("pair build ran on a complete stage")
+    }
+    val single = operators.Staged.parquet(spark, s"$key/single") {
+      fail("build ran on a complete stage")
+    }
+    assert(a.count() == 3 && b.count() == 5 && single.count() == 7)
+  }
 }
