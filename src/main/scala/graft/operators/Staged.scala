@@ -1,4 +1,5 @@
 package graft.operators
+import org.apache.spark.{JobExecutionStatus, SparkContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
@@ -26,7 +27,8 @@ import java.nio.file.{Files, StandardCopyOption}
   * publishes the whole target. A target therefore either doesn't exist
   * or holds every table complete-with-`_SUCCESS` — a reader can never
   * observe a half-overwritten table or a new table beside an old one, a
-  * crashed build leaves only scratch garbage, and when two sessions race
+  * build that throws removes its scratch (only a killed JVM leaves scratch
+  * garbage behind), and when two sessions race
   * the first rename wins and the loser discards its scratch and reads
   * the winner. That `_SUCCESS` check is the reuse rule: a prior result
   * is served only while it holds. Correctness stays oracle-guarded on
@@ -71,21 +73,45 @@ object Staged {
       s"$target: build yielded ${frames.size} frames for ${tables.size} tables")
     val tmp = new File(s"$scratchRoot/_tmp/${java.util.UUID.randomUUID()}")
     tmp.getParentFile.mkdirs()
-    tables.zip(frames).foreach { case (t, df) =>
-      df.write.mode("overwrite").parquet(tableDir(tmp, t).toString)
+    val sc = frames.head.sparkSession.sparkContext
+    val tag = s"graft-publish-${tmp.getName}"
+    try {
+      sc.addJobTag(tag)
+      try tables.zip(frames).foreach { case (t, df) =>
+        df.write.mode("overwrite").parquet(tableDir(tmp, t).toString)
+      } finally sc.removeJobTag(tag)
+      require(complete(tmp, tables), s"build left no _SUCCESS in $tmp")
+      // a legacy/corrupt target (exists but incomplete — e.g. one table of
+      // a multi-table stage) blocks the rename: clear it; completeness can
+      // only be observed through `complete`
+      if (target.exists() && !complete(target, tables)) rmTree(target)
+      target.getParentFile.mkdirs()
+      try Files.move(tmp.toPath, target.toPath, StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.nio.file.FileSystemException if complete(target, tables) =>
+        rmTree(tmp) // lost the race to a concurrent builder — theirs is whole
+      }
+      require(complete(target, tables), s"publish failed for $target")
+    } catch { case e: Throwable =>
+      // a failed build's partial parquet is garbage nobody would remove
+      try { awaitTasks(sc, tag); rmTree(tmp) }
+      catch { case c: Throwable => e.addSuppressed(c) }
+      throw e
     }
-    require(complete(tmp, tables), s"build left no _SUCCESS in $tmp")
-    // a legacy/corrupt target (exists but incomplete — e.g. one table of
-    // a multi-table stage) blocks the rename: clear it; completeness can
-    // only be observed through `complete`
-    if (target.exists() && !complete(target, tables)) rmTree(target)
-    target.getParentFile.mkdirs()
-    try Files.move(tmp.toPath, target.toPath, StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileSystemException if complete(target, tables) =>
-      rmTree(tmp) // lost the race to a concurrent builder — theirs is whole
-    }
-    require(complete(target, tables), s"publish failed for $target")
     true
+  }
+
+  /** Blocks, for at most 30 s, while a task of a job tagged `tag` still
+    * runs. A failed job's other tasks are flagged killed, not waited for,
+    * so one still starting up can create its output dir after the failure
+    * has reached the driver. */
+  private def awaitTasks(sc: SparkContext, tag: String): Unit = {
+    val st = sc.statusTracker
+    def running = st.getJobIdsForTag(tag).exists(st.getJobInfo(_).exists { job =>
+      job.status == JobExecutionStatus.RUNNING ||
+        job.stageIds.exists(st.getStageInfo(_).exists(_.numActiveTasks > 0))
+    })
+    val deadline = System.nanoTime() + 30L * 1000000000
+    while (running && System.nanoTime() < deadline) Thread.sleep(20)
   }
 
   /** Delete `d` and everything under it; absent `d` is a no-op. */

@@ -459,6 +459,26 @@ class ScaleSpec extends SparkSuite {
     assert(!target.exists(), "failed build left a reader-visible target dir")
   }
 
+  test("Staged: a failed build removes its scratch and rethrows") {
+    import org.apache.spark.sql.functions.{col, lit, when, raise_error, concat}
+    val scratch = new java.io.File(
+      sys.env.getOrElse("GRAFT_STAGED_ROOT", "tmpdata/graft_staged"), "_tmp")
+    def entries = Option(scratch.list()).map(_.toSet).getOrElse(Set.empty[String])
+    val before = entries
+    val key = s"spec_scratch/${java.util.UUID.randomUUID()}"
+    val e = intercept[Exception] {
+      operators.Staged.parquet(spark, key) {
+        spark.range(10).select(
+          when(col("id") < 5, col("id"))
+            .otherwise(raise_error(concat(lit("scratch boom "),
+              col("id").cast("string")))).as("x"))
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("scratch boom")))
+    assert(entries -- before == Set.empty, "failed build left its scratch under _tmp")
+  }
+
   private def stagedDir(key: String) = new java.io.File(
     sys.env.getOrElse("GRAFT_STAGED_ROOT", "tmpdata/graft_staged"), key)
 
