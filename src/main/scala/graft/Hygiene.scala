@@ -17,9 +17,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * a fresh JVM vs 103.9 s after 130 leaked queries in one session).
   *
   * Two release points fix it:
-  *  - operators that checkpoint PER ROUND release each round's blocks as
-  *    soon as the next round is materialized ([[release]] inside the loop —
-  *    peak pinned storage becomes one round, not `rounds`);
+  *  - iterative operators run their rounds through [[rounds]] (or
+  *    [[generations]] for a loop that stops at its own fixpoint test),
+  *    which releases each round's checkpoint as soon as the next round is
+  *    materialized — peak pinned storage becomes one round, not `rounds`;
   *  - session owners (benchmarks, verify dumps, tests, notebooks) call
   *    [[releaseAll]] between queries to drop the FINAL checkpoint that the
   *    returned plan still references, plus any cached plans.
@@ -29,12 +30,35 @@ object Hygiene {
   /** Unpersist the block-manager blocks behind a `localCheckpoint`'ed
     * frame. Safe only once no live plan will read the frame again — a local
     * checkpoint truncates lineage, so the blocks are unrecoverable after
-    * release. Intended for iterative loops: release round N after round
-    * N+1's EAGER checkpoint has materialized. */
+    * release. Every leaf checkpoint of `df` is released, so pass the
+    * checkpointed frame itself, never a plan over shared checkpoints. */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
       case l: LogicalRDD => l.rdd.unpersist(blocking = false)
       case _             => ()
+    }
+
+  /** The round loop of every iterative operator: round 0 is `input`
+    * eagerly checkpointed, round i is `step(round i−1)` eagerly
+    * checkpointed, and round i−1 is released once round i is materialized.
+    * Returns round `n` — n + 1 checkpoints, one left pinned for the
+    * returned plan until [[releaseAll]]. A loop whose last round stays
+    * lazy applies its step once more to `rounds(input, n − 1)(step)`. */
+  def rounds(input: DataFrame, n: Int)(step: DataFrame => DataFrame): DataFrame = {
+    require(n >= 0, s"round count must be non-negative, got $n")
+    generations(input)(step).drop(n).next()
+  }
+
+  /** [[rounds]] without a round count, for a loop that stops at its own
+    * fixpoint test: round 0 is checkpointed at the call, round i when the
+    * iterator is asked for it. Each release hits only a checkpoint made
+    * here, never a shared checkpoint that `step` reads. */
+  def generations(input: DataFrame)(
+      step: DataFrame => DataFrame): Iterator[DataFrame] =
+    Iterator.iterate(input.localCheckpoint()) { prev =>
+      val next = step(prev).localCheckpoint()
+      release(prev)
+      next
     }
 
   /** Drop every persistent RDD and cached plan in the session — the

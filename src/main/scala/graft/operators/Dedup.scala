@@ -919,21 +919,17 @@ object Dedup {
     * min; rounds = contraction iterations to fixpoint (exposed so the
     * spec can assert the logarithmic bound). */
   private[graft] def starContract(pairs: DataFrame): (DataFrame, Int) = {
-    // canonical (hi, lo) edge form, hi > lo — self-loops dropped
-    var e = pairs
-      .select(greatest(col("doc_a"), col("doc_b")).as("hi"),
-        least(col("doc_a"), col("doc_b")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct().localCheckpoint()
     def checksum(df: DataFrame): (Long, Long) = {
       val r = df.agg(count(lit(1)),
         coalesce(sum(xxhash64(col("hi"), col("lo"))), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    var prev = (-1L, 0L)
-    var cur = checksum(e)
-    var rounds = 0
-    while (cur != prev) {
-      rounds += 1
+    // canonical (hi, lo) edge form, hi > lo — self-loops dropped; each
+    // round is checkpointed and the previous one released (graft.Hygiene)
+    val gens = graft.Hygiene.generations(pairs
+      .select(greatest(col("doc_a"), col("doc_b")).as("hi"),
+        least(col("doc_a"), col("doc_b")).as("lo"))
+      .filter(col("hi") =!= col("lo")).distinct()) { e =>
       // large-star over the symmetrized neighborhoods
       val sym = e.select(col("hi").as("u"), col("lo").as("v"))
         .unionByName(e.select(col("lo").as("u"), col("hi").as("v")))
@@ -947,17 +943,19 @@ object Dedup {
       // neighborhood S under u; emit (x, min(S)) for x ∈ S ∪ {u} \ {min}
       val sMins = ls.groupBy("hi").agg(min("lo").as("m"))
       val withM = ls.join(sMins.hint("shuffle_hash"), "hi")
-      val next = withM.select(col("lo").as("h2"), col("m").as("l2"))
+      withM.select(col("lo").as("h2"), col("m").as("l2"))
         .filter(col("h2") =!= col("l2"))
         .unionByName(withM.select(col("hi").as("h2"), col("m").as("l2")))
         .distinct()
         .select(col("h2").as("hi"), col("l2").as("lo"))
-        .localCheckpoint()
-      // the new round is materialized (eager checkpoint) — the previous
-      // round's blocks are dead, release them so the contraction holds one
-      // edge-set generation pinned, not O(log n) of them (graft.Hygiene)
-      graft.Hygiene.release(e)
-      e = next
+    }
+    var e = gens.next()
+    var prev = (-1L, 0L)
+    var cur = checksum(e)
+    var rounds = 0
+    while (cur != prev) {
+      rounds += 1
+      e = gens.next()
       prev = cur
       cur = checksum(e)
     }

@@ -207,20 +207,13 @@ object Graph {
     // joins and the per-round checkpoint each carry HALF the rows — the
     // symmetric view is only ever materialized implicitly, in the final
     // degree aggregate's union.
-    val p0 = pairs.localCheckpoint()
-    val peeled = (1 to rounds).foldLeft(p0) { (p, _) =>
+    val peeled = graft.Hygiene.rounds(pairs, rounds) { p =>
       val keep = p.select(col("a").as("n")).unionByName(p.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("n").as("kn"))
-      val next = p.join(keep.hint("shuffle_hash"), col("a") === col("kn")).drop("kn")
+      p.join(keep.hint("shuffle_hash"), col("a") === col("kn")).drop("kn")
         .join(keep.select(col("kn").as("kn2")).hint("shuffle_hash"),
           col("b") === col("kn2")).drop("kn2")
-        .localCheckpoint()
-      // round N's eager checkpoint is materialized: round N−1's blocks are
-      // dead — release them NOW so peak pinned storage is one round's edge
-      // set, not `rounds` of them (the session-leak fix, graft.Hygiene)
-      graft.Hygiene.release(p)
-      next
     }
     peeled.select(col("a").as("part")).unionByName(peeled.select(col("b").as("part")))
       .groupBy("part").agg(count(lit(1)).as("core_deg"))

@@ -395,19 +395,15 @@ object Sampling {
     val docs = Tables.documents(spark, sfDir)
     val dom = domainLoss(spark, sfDir)
     // k rows from here down — the corpus pipeline materializes ONCE
-    // (localCheckpoint; without it every round's two scalar aggregates
+    // (round 0's checkpoint; without it every round's two scalar aggregates
     // re-ran the whole corpus chain — measured 48 s), and each ROUND
-    // checkpoints too: round t's plan contains round t−1 twice (main
-    // branch + the excess-loss reference aggregate), so an uncut lineage
-    // doubles per round and re-executes every inner broadcast job
-    // (measured ~6 s of pure k-row plan churn). Rounds 2..K−1 release
-    // inside the loop (the [[graft.operators.Dedup]] iterative pattern);
-    // round 1 stays pinned for the output's weight_r1 column, and the
-    // session owner's Hygiene.releaseAll drops the rest between queries.
-    var cur = dom.localCheckpoint().withColumn("w", lit(50000L))
-    var after1: DataFrame = null
-    var prevRound: DataFrame = null
-    for (t <- 1 to rounds) {
+    // checkpoints too (graft.Hygiene.rounds): round t's plan contains round
+    // t−1 twice (main branch + the excess-loss reference aggregate), so an
+    // uncut lineage doubles per round and re-executes every inner broadcast
+    // job (measured ~6 s of pure k-row plan churn). Round 1's weight rides
+    // along as column w1 for the output's weight_r1.
+    val last = graft.Hygiene.rounds(dom.withColumn("w", lit(50000L))
+        .withColumn("w1", lit(null).cast("long")), rounds) { cur =>
       val r = cur.agg(sum(col("w") * col("ld")).as("r"))
       val u = least(greatest(lit(0.5) * ((col("ld").cast("double")
           - col("r").cast("double") / lit(1000000.0)) / lit(1000000.0)),
@@ -420,18 +416,15 @@ object Sampling {
           * lit(1000.0) + lit(0.5d)).cast("long"))
         .drop("_t", "w", "r")
       val s = bw.agg(sum("bw").as("s"))
-      cur = bw.crossJoin(broadcast(s))
+      bw.crossJoin(broadcast(s))
         .withColumn("w", floor(col("bw").cast("double")
             / col("s").cast("double") * lit(990000.0) + lit(500.0)
           + lit(0.5d)).cast("long"))
         .drop("bw", "s")
-        .localCheckpoint()
-      if (prevRound != null) graft.Hygiene.release(prevRound)
-      prevRound = if (t == 1) null else cur // round 1 pins for weight_r1
-      if (t == 1) after1 = cur.select(col("source"), col("w").as("w1"))
+        .withColumn("w1", coalesce(col("w1"), col("w")))
     }
     val totDocs = docs.agg(count(lit(1)).as("tot_docs"))
-    cur.join(after1, "source").crossJoin(broadcast(totDocs))
+    last.crossJoin(broadcast(totDocs))
       .select(col("source"), col("n_docs"), col("n_tokens"),
         Exprs.r4(col("ld").cast("double") / lit(1e6)).as("ce"),
         Exprs.r4(col("w1").cast("double") / lit(1e6)).as("weight_r1"),

@@ -1319,20 +1319,20 @@ object Similarity {
       .select(col("u"), (col("u") + col("j") * stride).as("w"))
       .join(e.select(col("vec_id").as("w")), Seq("w"), "left_semi")
       .select("u", "w")
-    var edges = topk(clique.union(strides))
-    (1 to rounds).foreach { _ =>
-      // pin the previous round to ONE materialization: it is read three
-      // times below (two self-join arms + the candidate union), and the
-      // next round would otherwise re-execute the whole lineage tree
-      val cur = edges.localCheckpoint()
+    // each round's input is checkpointed (graft.Hygiene.rounds): it is read
+    // three times (two self-join arms + the candidate union), and the next
+    // round would otherwise re-execute the whole lineage tree
+    def descend(cur: DataFrame): DataFrame = {
       val und = cur.select("u", "w")
         .union(cur.select(col("w").as("u"), col("u").as("w")))
       val cand = und.as("x").join(und.as("y"), col("x.w") === col("y.u"))
         .select(col("x.u").as("u"), col("y.w").as("w"))
         .filter(col("u") =!= col("w"))
-      edges = topk(cur.select("u", "w").union(cand).distinct())
+      topk(cur.select("u", "w").union(cand).distinct())
     }
-    edges
+    val init = topk(clique.union(strides))
+    if (rounds == 0) init
+    else descend(graft.Hygiene.rounds(init, rounds - 1)(descend))
   }
 
   /** The descent unrolled round by round as a CTE chain (the
@@ -1417,41 +1417,60 @@ object Similarity {
   def annGraphSearch(spark: SparkSession, sfDir: String, k: Int = 5,
       blockSize: Int = 100, rounds: Int = 2, stride: Int = 137,
       beam: Int = 10, hops: Int = 3, topk: Int = 5): DataFrame = {
-    require(hops >= 1, "annGraphSearch needs at least one hop")
     val e = normedEmbeddings(spark, sfDir)
     val g = stagedDescentEdges(spark, sfDir, -1, k, blockSize, rounds, stride)
       .select("u", "w")
-    val und = g.union(g.select(col("w").as("u"), col("u").as("w")))
-      .distinct().localCheckpoint()
     val qv = e.filter(col("vec_id") % 200 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("n").as("qn"))
-    val rankW = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("node").asc)
-    def score(cands: DataFrame): DataFrame = cands
-      .join(e.select(col("vec_id").as("node"), col("v").as("nv"),
-        col("n").as("nn")), "node")
-      .join(qv, "query_id")
-      .select(col("query_id"), col("node"),
-        Exprs.r4(dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-          .as("cos"))
-      .withColumn("rank", row_number().over(rankW))
-    var state = qv.select(col("query_id"), col("query_id").as("node"))
-    var scored = state
-    (1 to hops).foreach { _ =>
-      val cur = state.localCheckpoint()
-      val cand = cur.join(und, cur("node") === und("u"))
-        .select(col("query_id"), col("w").as("node"))
-        .union(cur).distinct()
-      scored = score(cand).filter(col("rank") <= beam)
-      state = scored.select("query_id", "node")
-    }
-    scored.filter(col("node") =!= col("query_id"))
-      .withColumn("rk", row_number().over(rankW))
+    beamWalk(e, qv, g, qv.select(col("query_id"), col("query_id").as("node")),
+        beam, hops)
+      .filter(col("node") =!= col("query_id"))
+      .withColumn("rk", row_number().over(beamRank))
       .filter(col("rk") <= topk)
       .select(col("query_id"), col("rk").cast("long").as("rank"),
         col("node").as("target_id"), col("cos"))
       .orderBy("query_id", "rank")
+  }
+
+  /** The per-query candidate order of every beam: cos descending, node id
+    * ascending. */
+  private val beamRank = Window.partitionBy("query_id")
+    .orderBy(col("cos").desc, col("node").asc)
+
+  /** (query_id, node) candidates scored against their query — `e` holds
+    * the (vec_id, v, n) nodes, `qv` the (query_id, qv, qn) queries — as
+    * (query_id, node, cos, rank) in [[beamRank]] order. */
+  private def beamScore(e: DataFrame, qv: DataFrame,
+      cands: DataFrame): DataFrame = cands
+    .join(e.select(col("vec_id").as("node"), col("v").as("nv"),
+      col("n").as("nn")), "node")
+    .join(qv.select("query_id", "qv", "qn"), "query_id")
+    .select(col("query_id"), col("node"),
+      Exprs.r4(dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
+        .as("cos"))
+    .withColumn("rank", row_number().over(beamRank))
+
+  /** The greedy beam walk of [[annGraphSearch]] (member queries enter at
+    * their own node) and [[anchoredWalk]] (held-out queries enter at a
+    * scored anchor frontier): `hops` times, expand the (query_id, node)
+    * frontier — `start` first — along the undirected edges of `g`,
+    * score the candidates plus the frontier itself ([[beamScore]]) and
+    * keep the top `beam`. Returns the last hop's (query_id, node, cos,
+    * rank ≤ beam). */
+  private def beamWalk(e: DataFrame, qv: DataFrame, g: DataFrame,
+      start: DataFrame, beam: Int, hops: Int): DataFrame = {
+    require(hops >= 1, "the beam walk needs at least one hop")
+    val und = g.union(g.select(col("w").as("u"), col("u").as("w")))
+      .distinct().localCheckpoint()
+    def hop(cur: DataFrame): DataFrame = beamScore(e, qv,
+        cur.join(und, cur("node") === und("u"))
+          .select(col("query_id"), col("w").as("node"))
+          .union(cur).distinct())
+      .filter(col("rank") <= beam)
+    // each hop's frontier is checkpointed and the one before released; the
+    // last hop stays lazy
+    hop(graft.Hygiene.rounds(start, hops - 1)(hop(_).select("query_id", "node")))
   }
 
   /** The multi-probe hop-0 anchor set shared by [[annGraphSearchOos]] and
@@ -1564,42 +1583,20 @@ object Similarity {
     * [[annGraphInsert]] (maintenance: a batch joining the graph). Rows
     * where `isQuery` holds are EXCLUDED from the descent build and enter
     * via [[oosAnchors]]' multi-probe buckets + seed; the walk then runs
-    * [[annGraphSearch]]'s expansion. Returns (query_id, node, cos, rank ≤
+    * [[beamWalk]]. Returns (query_id, node, cos, rank ≤
     * topk), unsorted. */
   private def anchoredWalk(all: DataFrame, isQuery: Column, g: DataFrame,
       beam: Int, hops: Int,
       topk: Int, nBits: Int, nTables: Int): DataFrame = {
-    require(hops >= 1, "the anchored walk needs at least one hop")
     val e = all.filter(!isQuery) // corpus: the graph never sees a query
-    val und = g.union(g.select(col("w").as("u"), col("u").as("w")))
-      .distinct().localCheckpoint()
     val qv = all.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("n").as("qn"), col("v"))
-    val rankW = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("node").asc)
-    def score(cands: DataFrame): DataFrame = cands
-      .join(e.select(col("vec_id").as("node"), col("v").as("nv"),
-        col("n").as("nn")), "node")
-      .join(qv.select("query_id", "qv", "qn"), "query_id")
-      .select(col("query_id"), col("node"),
-        Exprs.r4(dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-          .as("cos"))
-      .withColumn("rank", row_number().over(rankW))
     // hop 0: the multi-probe anchor — bucket-mates of every table plus the
     // seed, scored, top beam = the entry frontier
-    val anchors = oosAnchors(e, qv, nBits, nTables)
-    var scored = score(anchors).filter(col("rank") <= beam)
-    var state = scored.select("query_id", "node")
-    (1 to hops).foreach { _ =>
-      val cur = state.localCheckpoint()
-      val cand = cur.join(und, cur("node") === und("u"))
-        .select(col("query_id"), col("w").as("node"))
-        .union(cur).distinct()
-      scored = score(cand).filter(col("rank") <= beam)
-      state = scored.select("query_id", "node")
-    }
-    scored.filter(col("rank") <= topk)
+    val start = beamScore(e, qv, oosAnchors(e, qv, nBits, nTables))
+      .filter(col("rank") <= beam).select("query_id", "node")
+    beamWalk(e, qv, g, start, beam, hops).filter(col("rank") <= topk)
   }
 
   /** Incremental graph maintenance — [[Dedup.dedupIncremental]]'s verb for
@@ -1929,62 +1926,6 @@ object Similarity {
   private def graphApplyChainCtes(k: Int, blockSize: Int, rounds: Int,
       stride: Int, beam: Int, hops: Int, nBits: Int,
       nTables: Int): String = {
-    val c = cosSqlFragment.replace("QV", "qq.v").replace("TV", "t.v")
-    // suffix-parameterized twins of oosAnchorCtes / oosWalkCtes' hop
-    // chain: the apply oracle needs TWO walks with different corpora,
-    // queries, and graphs in one WITH body
-    def anchor(sfx: String, eCte: String, qCte: String): String = {
-      def table(t: Int): String =
-        if (nBits > 0) Dedup.lshBucketSqlExpr(nBits, t * nBits)
-        else Dedup.lshBucketSqlExprDyn(AnchorMaxBits, t * AnchorMaxBits,
-          "auto_w")
-      val from = if (nBits > 0) "" else s", wdt$sfx"
-      val perTable = (0 until nTables).map { t =>
-        val b = table(t)
-        s"""    SELECT qb.query_id, cb.node FROM
-           |      (SELECT vec_id AS query_id, $b AS bucket FROM $qCte$from) qb
-           |      JOIN (SELECT vec_id AS node, $b AS bucket FROM $eCte$from) cb
-           |      USING (bucket)""".stripMargin
-      }.mkString("\n    UNION ALL\n")
-      val widthCte = if (nBits > 0) "" else
-        s"""wdt$sfx AS (
-           |  SELECT ${Dedup.autoBitsSqlExpr("count(*)", AnchorTargetBucket,
-                AnchorMinBits, AnchorMaxBits)} AS auto_w FROM $eCte),
-           |""".stripMargin
-      s"""${widthCte}c${sfx}_0 AS (
-         |  SELECT DISTINCT query_id, node FROM (
-         |$perTable
-         |    UNION ALL
-         |    SELECT vec_id AS query_id, (SELECT min(vec_id) FROM $eCte) AS node
-         |    FROM $qCte))""".stripMargin
-    }
-    def walk(sfx: String, eCte: String, qCte: String,
-        undCte: String): String = {
-      val hopCtes = (1 to hops).map { h =>
-        s"""c${sfx}_$h AS (
-           |  SELECT DISTINCT query_id, node FROM (
-           |    SELECT s.query_id, g.w AS node
-           |    FROM s${sfx}_${h - 1} s JOIN $undCte g ON s.node = g.u
-           |    UNION ALL SELECT query_id, node FROM s${sfx}_${h - 1})),
-           |r${sfx}_$h AS (
-           |  SELECT query_id, node, cos, ROW_NUMBER() OVER (
-           |    PARTITION BY query_id ORDER BY cos DESC, node ASC) AS rank
-           |  FROM (SELECT cd.query_id, cd.node, $c AS cos
-           |    FROM c${sfx}_$h cd JOIN $eCte t ON cd.node = t.vec_id
-           |    JOIN $qCte qq ON cd.query_id = qq.vec_id)),
-           |s${sfx}_$h AS (SELECT query_id, node FROM r${sfx}_$h
-           |  WHERE rank <= $beam)""".stripMargin
-      }.mkString(",\n")
-      s"""r${sfx}_0 AS (
-         |  SELECT query_id, node, cos, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, node ASC) AS rank
-         |  FROM (SELECT cd.query_id, cd.node, $c AS cos
-         |    FROM c${sfx}_0 cd JOIN $eCte t ON cd.node = t.vec_id
-         |    JOIN $qCte qq ON cd.query_id = qq.vec_id)),
-         |s${sfx}_0 AS (SELECT query_id, node FROM r${sfx}_0
-         |  WHERE rank <= $beam),
-         |$hopCtes""".stripMargin
-    }
     // the load-bearing CTEs are MATERIALIZED: DuckDB inlines CTEs by
     // default, and walk 2's every reference to the gen-1 graph would
     // otherwise re-expand the ENTIRE walk-1 chain (which re-expands the
@@ -2000,8 +1941,8 @@ object Similarity {
        |  SELECT DISTINCT u, w FROM (
        |    SELECT u, w FROM gbase
        |    UNION ALL SELECT w AS u, u AS w FROM gbase)),
-       |${anchor("1", "e", "q1")},
-       |${walk("1", "e", "q1", "und1")},
+       |${oosAnchorCtes("1", "e", "q1", nBits, nTables)},
+       |${beamWalkCtes("1", 0, hops, beam, "e", "q1", "und1")},
        |a1 AS MATERIALIZED (SELECT query_id AS u, node AS w, cos, rank
        |       FROM r1_$hops WHERE rank <= $k),
        |g1 AS MATERIALIZED (
@@ -2016,8 +1957,8 @@ object Similarity {
        |und2 AS MATERIALIZED (
        |  SELECT DISTINCT u, w FROM (
        |    SELECT u, w FROM g1 UNION ALL SELECT w AS u, u AS w FROM g1)),
-       |${anchor("2", "e2", "q2")},
-       |${walk("2", "e2", "q2", "und2")},
+       |${oosAnchorCtes("2", "e2", "q2", nBits, nTables)},
+       |${beamWalkCtes("2", 0, hops, beam, "e2", "q2", "und2")},
        |a2 AS (SELECT query_id AS u, node AS w, cos, rank
        |       FROM r2_$hops WHERE rank <= $k)""".stripMargin
   }
@@ -2050,40 +1991,71 @@ object Similarity {
        |q AS (
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
        |  FROM embeddings WHERE vec_id % 100 = 7),
-       |${oosAnchorCtes(nBits, nTables)}
+       |${oosAnchorCtes("", "e", "q", nBits, nTables)}
        |SELECT query_id, COUNT(*) AS n_anchor FROM c_0
        |GROUP BY query_id ORDER BY query_id""".stripMargin
 
-  /** The hop-0 anchor CTE (`c_0(query_id, node)`) — the multi-probe
-    * bucket joins OR'd table by table plus the fixed seed, deduped.
-    * Expects upstream CTEs `e(vec_id, v)` (corpus) and `q(vec_id, v)`
-    * (held-out queries). Shared by [[oosWalkCtes]] and
-    * [[annGraphAnchorSql]] so the dashboard counts EXACTLY the rows the
-    * serving walk scores. */
-  private def oosAnchorCtes(nBits: Int, nTables: Int): String = {
+  /** The hop-0 anchor CTE (`c<sfx>_0(query_id, node)`) — the multi-probe
+    * bucket joins OR'd table by table plus the fixed seed, deduped, over
+    * the corpus CTE `eCte(vec_id, v)` and the held-out query CTE
+    * `qCte(vec_id, v)`. Shared by [[oosWalkCtes]], [[annGraphAnchorSql]]
+    * (so the dashboard counts EXACTLY the rows the serving walk scores)
+    * and [[graphApplyChainCtes]]' two walks (suffixes 1 and 2). */
+  private def oosAnchorCtes(sfx: String, eCte: String, qCte: String,
+      nBits: Int, nTables: Int): String = {
     def table(t: Int): String =
       if (nBits > 0) Dedup.lshBucketSqlExpr(nBits, t * nBits)
       else Dedup.lshBucketSqlExprDyn(AnchorMaxBits, t * AnchorMaxBits,
         "auto_w")
-    val from = if (nBits > 0) "" else ", wdt"
+    val from = if (nBits > 0) "" else s", wdt$sfx"
     val perTable = (0 until nTables).map { t =>
       val b = table(t)
       s"""    SELECT qb.query_id, cb.node FROM
-         |      (SELECT vec_id AS query_id, $b AS bucket FROM q$from) qb
-         |      JOIN (SELECT vec_id AS node, $b AS bucket FROM e$from) cb
+         |      (SELECT vec_id AS query_id, $b AS bucket FROM $qCte$from) qb
+         |      JOIN (SELECT vec_id AS node, $b AS bucket FROM $eCte$from) cb
          |      USING (bucket)""".stripMargin
     }.mkString("\n    UNION ALL\n")
     val widthCte = if (nBits > 0) "" else
-      s"""wdt AS (
+      s"""wdt$sfx AS (
          |  SELECT ${Dedup.autoBitsSqlExpr("count(*)", AnchorTargetBucket,
-              AnchorMinBits, AnchorMaxBits)} AS auto_w FROM e),
+              AnchorMinBits, AnchorMaxBits)} AS auto_w FROM $eCte),
          |""".stripMargin
-    s"""${widthCte}c_0 AS (
+    s"""${widthCte}c${sfx}_0 AS (
        |  SELECT DISTINCT query_id, node FROM (
        |$perTable
        |    UNION ALL
-       |    SELECT vec_id AS query_id, (SELECT min(vec_id) FROM e) AS node
-       |    FROM q))""".stripMargin
+       |    SELECT vec_id AS query_id, (SELECT min(vec_id) FROM $eCte) AS node
+       |    FROM $qCte))""".stripMargin
+  }
+
+  /** The beam walk ([[beamWalk]]) unrolled hop by hop as CTEs, shared by
+    * every walk oracle: for hop h, `c<sfx>_h` is the frontier
+    * `s<sfx>_{h−1}` plus its neighbors in the undirected graph CTE
+    * `undCte` (hop 0's `c<sfx>_0` is the caller's anchor set), `r<sfx>_h`
+    * scores it against the corpus CTE `eCte(vec_id, v)` and the query CTE
+    * `qCte(vec_id, v)` and ranks it per query, and `s<sfx>_h` keeps the
+    * top `beam`. Emits hops `from` to `hops`; with `from` = 1 the caller
+    * defines the entry frontier `s<sfx>_0`. */
+  private def beamWalkCtes(sfx: String, from: Int, hops: Int, beam: Int,
+      eCte: String, qCte: String, undCte: String): String = {
+    val c = cosSqlFragment.replace("QV", "qq.v").replace("TV", "t.v")
+    (from to hops).map { h =>
+      val expand = if (h == 0) "" else
+        s"""c${sfx}_$h AS (
+           |  SELECT DISTINCT query_id, node FROM (
+           |    SELECT s.query_id, g.w AS node
+           |    FROM s${sfx}_${h - 1} s JOIN $undCte g ON s.node = g.u
+           |    UNION ALL SELECT query_id, node FROM s${sfx}_${h - 1})),
+           |""".stripMargin
+      s"""${expand}r${sfx}_$h AS (
+         |  SELECT query_id, node, cos, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id ORDER BY cos DESC, node ASC) AS rank
+         |  FROM (SELECT cd.query_id, cd.node, $c AS cos
+         |    FROM c${sfx}_$h cd JOIN $eCte t ON cd.node = t.vec_id
+         |    JOIN $qCte qq ON cd.query_id = qq.vec_id)),
+         |s${sfx}_$h AS (SELECT query_id, node FROM r${sfx}_$h WHERE rank <= $beam)"""
+        .stripMargin
+    }.mkString(",\n")
   }
 
   /** The held-out descent chain + multi-probe anchor + beam walk as a
@@ -2091,23 +2063,7 @@ object Similarity {
     * [[annGraphSearchOosSql]] and [[annGraphRecallSql]] oracles. */
   private def oosWalkCtes(k: Int, blockSize: Int, rounds: Int, stride: Int,
       beam: Int, hops: Int, nBits: Int, nTables: Int,
-      qMod: Int = 7): String = {
-    val c = cosSqlFragment.replace("QV", "qq.v").replace("TV", "t.v")
-    val hopCtes = (1 to hops).map { h =>
-      s"""c_$h AS (
-         |  SELECT DISTINCT query_id, node FROM (
-         |    SELECT s.query_id, g.w AS node
-         |    FROM s_${h - 1} s JOIN und g ON s.node = g.u
-         |    UNION ALL SELECT query_id, node FROM s_${h - 1})),
-         |r_$h AS (
-         |  SELECT query_id, node, cos, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, node ASC) AS rank
-         |  FROM (SELECT cd.query_id, cd.node, $c AS cos
-         |    FROM c_$h cd JOIN e t ON cd.node = t.vec_id
-         |    JOIN q qq ON cd.query_id = qq.vec_id)),
-         |s_$h AS (SELECT query_id, node FROM r_$h WHERE rank <= $beam)"""
-        .stripMargin
-    }.mkString(",\n")
+      qMod: Int = 7): String =
     s"""${nndescentCtes(k, blockSize, rounds, stride,
         s" WHERE vec_id % 100 <> $qMod")},
        |q AS (
@@ -2117,16 +2073,8 @@ object Similarity {
        |  SELECT DISTINCT u, w FROM (
        |    SELECT u, w FROM g_$rounds WHERE rank <= $k
        |    UNION ALL SELECT w AS u, u AS w FROM g_$rounds WHERE rank <= $k)),
-       |${oosAnchorCtes(nBits, nTables)},
-       |r_0 AS (
-       |  SELECT query_id, node, cos, ROW_NUMBER() OVER (
-       |    PARTITION BY query_id ORDER BY cos DESC, node ASC) AS rank
-       |  FROM (SELECT cd.query_id, cd.node, $c AS cos
-       |    FROM c_0 cd JOIN e t ON cd.node = t.vec_id
-       |    JOIN q qq ON cd.query_id = qq.vec_id)),
-       |s_0 AS (SELECT query_id, node FROM r_0 WHERE rank <= $beam),
-       |$hopCtes""".stripMargin
-  }
+       |${oosAnchorCtes("", "e", "q", nBits, nTables)},
+       |${beamWalkCtes("", 0, hops, beam, "e", "q", "und")}""".stripMargin
 
   /** Oracle for [[annGraphSearchOos]] — the held-out descent chain, the
     * multi-probe anchor joins, and the beam walk unrolled hop by hop. */
@@ -2298,23 +2246,7 @@ object Similarity {
     * unrolled hop by hop. */
   def annGraphSearchSql(k: Int = 5, blockSize: Int = 100, rounds: Int = 2,
       stride: Int = 137, beam: Int = 10, hops: Int = 3,
-      topk: Int = 5): String = {
-    val c = cosSqlFragment.replace("QV", "qq.v").replace("TV", "t.v")
-    val hopCtes = (1 to hops).map { h =>
-      s"""c_$h AS (
-         |  SELECT DISTINCT query_id, node FROM (
-         |    SELECT s.query_id, g.w AS node
-         |    FROM s_${h - 1} s JOIN und g ON s.node = g.u
-         |    UNION ALL SELECT query_id, node FROM s_${h - 1})),
-         |r_$h AS (
-         |  SELECT query_id, node, cos, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, node ASC) AS rank
-         |  FROM (SELECT cd.query_id, cd.node, $c AS cos
-         |    FROM c_$h cd JOIN e t ON cd.node = t.vec_id
-         |    JOIN e qq ON cd.query_id = qq.vec_id)),
-         |s_$h AS (SELECT query_id, node FROM r_$h WHERE rank <= $beam)"""
-        .stripMargin
-    }.mkString(",\n")
+      topk: Int = 5): String =
     s"""WITH ${nndescentCtes(k, blockSize, rounds, stride)},
        |und AS (
        |  SELECT DISTINCT u, w FROM (
@@ -2322,7 +2254,7 @@ object Similarity {
        |    UNION ALL SELECT w AS u, u AS w FROM g_$rounds WHERE rank <= $k)),
        |s_0 AS (SELECT vec_id AS query_id, vec_id AS node FROM e
        |  WHERE vec_id % 200 = 0),
-       |$hopCtes
+       |${beamWalkCtes("", 1, hops, beam, "e", "e", "und")}
        |SELECT query_id, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
        |    ORDER BY cos DESC, node ASC) AS BIGINT) AS rank,
        |  node AS target_id, cos
@@ -2330,5 +2262,4 @@ object Similarity {
        |QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
        |    ORDER BY cos DESC, node ASC) <= $topk
        |ORDER BY query_id, rank""".stripMargin
-  }
 }

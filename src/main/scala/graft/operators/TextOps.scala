@@ -345,26 +345,36 @@ object TextOps {
     * to DOUBLE so DuckDB cannot route the chain through DECIMAL), and the
     * result lands on a 1e-6 grid. */
   def bigramKn(spark: SparkSession, sfDir: String, k: Int = 100): DataFrame = {
-    // four consumers (w1 marginals, w2 marginal, total, the final join)
-    // would each replay the corpus pair-explode — materialize the type
-    // table once, the same output-sized trade the graph queries make.
-    // The prefix total Σn12 and the successor-type count N₁₊(w1·) group by
-    // the SAME key, so they are ONE aggregate (one shuffle + one join
-    // instead of two of each — measured ~2× on the KN chain).
+    knTable(spark, sfDir)
+      .select(col("w1"), col("w2"), col("n12"), col("n1"),
+        (floor(pKn * lit(1e6) + lit(0.5d)) / lit(1e6)).as("p_kn"))
+      .orderBy(col("n12").desc, col("w1"), col("w2"))
+      .limit(k)
+  }
+
+  /** The bigram type table joined with every Kneser–Ney ingredient: (w2,
+    * w1, n12, n1 = c(w1·), nsucc = N₁₊(w1·), npred = N₁₊(·w2), nn = N) —
+    * shared by [[bigramKn]] and [[docLmScoreKn]], with [[pKn]] over it.
+    * Four consumers (w1 marginals, w2 marginal, total, the final join)
+    * would each replay the corpus pair-explode — materialize the type
+    * table once, the same output-sized trade the graph queries make. The
+    * prefix total Σn12 and the successor-type count N₁₊(w1·) group by the
+    * SAME key, so they are ONE aggregate (one shuffle + one join instead of
+    * two of each — measured ~2× on the KN chain). */
+  private def knTable(spark: SparkSession, sfDir: String): DataFrame = {
     val c = bigramCounts(spark, sfDir).localCheckpoint()
     val w1m = c.groupBy("w1")
       .agg(sum("n12").as("n1"), count(lit(1)).as("nsucc"))
     val npred = c.groupBy(col("w2")).agg(count(lit(1)).as("npred"))
     val total = c.agg(count(lit(1)).as("nn"))
-    val pkn = (col("n12").cast("double") - lit(0.75d)) / col("n1") +
-      lit(0.75d) * col("nsucc") / col("n1") * col("npred") / col("nn")
-    c.join(w1m, "w1").join(npred, "w2")
-      .crossJoin(broadcast(total))
-      .select(col("w1"), col("w2"), col("n12"), col("n1"),
-        (floor(pkn * lit(1e6) + lit(0.5d)) / lit(1e6)).as("p_kn"))
-      .orderBy(col("n12").desc, col("w1"), col("w2"))
-      .limit(k)
+    c.join(w1m, "w1").join(npred, "w2").crossJoin(broadcast(total))
   }
+
+  /** P_KN(w2|w1) over [[knTable]]'s columns, in the oracle's operation
+    * order. */
+  private def pKn: Column =
+    (col("n12").cast("double") - lit(0.75d)) / col("n1") +
+      lit(0.75d) * col("nsucc") / col("n1") * col("npred") / col("nn")
 
   def bigramKnSql(k: Int = 100): String =
     s"""WITH w AS (
@@ -1964,19 +1974,9 @@ object TextOps {
     * (checkpointed) bigram type table that all four KN aggregates read;
     * a second builds the doc-bigram occurrences. */
   def docLmScoreKn(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = bigramCounts(spark, sfDir).localCheckpoint()
-    // Σn12 and N₁₊(w1·) share the group key → one fused aggregate (see
-    // [[bigramKn]])
-    val w1m = c.groupBy("w1")
-      .agg(sum("n12").as("n1"), count(lit(1)).as("nsucc"))
-    val npred = c.groupBy(col("w2")).agg(count(lit(1)).as("npred"))
-    val total = c.agg(count(lit(1)).as("nn"))
-    val pkn = (col("n12").cast("double") - lit(0.75d)) / col("n1") +
-      lit(0.75d) * col("nsucc") / col("n1") * col("npred") / col("nn")
-    val lm = c.join(w1m, "w1").join(npred, "w2")
-      .crossJoin(broadcast(total))
+    val lm = knTable(spark, sfDir)
       .select(Exprs.md5num(concat(col("w1"), lit(" "), col("w2"))).as("h"),
-        floor(pkn * lit(1e6) + lit(0.5d)).cast("long").as("p_grid"))
+        floor(pKn * lit(1e6) + lit(0.5d)).cast("long").as("p_grid"))
     val w = words(col("text"))
     val docBg = Tables.documents(spark, sfDir)
       .filter(size(w) >= 2)
@@ -2152,14 +2152,13 @@ object TextOps {
     * per-round pick crosses to the driver. */
   private def trainBpe(spark: SparkSession, sfDir: String,
       rounds: Int): Seq[(Long, String, String, Long)] = {
-    var vocab = Tables.documents(spark, sfDir)
+    val vocab0 = Tables.documents(spark, sfDir)
       .select(explode(words(col("text"))).as("word"))
       .filter(length(col("word")) >= 1)
       .groupBy("word").agg(count(lit(1)).as("wn"))
       .select(bpeSym0.as("s"), col("wn"))
-      .localCheckpoint()
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    (1 to rounds).foreach { r =>
+    def pick(vocab: DataFrame): (String, String) = {
       val ss = split(trim(col("s")), "  ")
       val best = vocab
         .select(col("wn"), ss.as("ss"))
@@ -2171,17 +2170,18 @@ object TextOps {
         .orderBy(col("n").desc, col("left_sym"), col("right_sym"))
         .limit(1).head()
       val (l, rr, n) = (best.getString(0), best.getString(1), best.getLong(2))
-      picks += ((r.toLong, l, rr, n))
-      if (r < rounds) {
-        val applied = vocab
-          .select(replace(col("s"), lit(s" $l  $rr "), lit(s" $l$rr ")).as("s"),
-            col("wn"))
-          .localCheckpoint()
-        graft.Hygiene.release(vocab)
-        vocab = applied
-      }
+      picks += ((picks.size + 1L, l, rr, n))
+      (l, rr)
     }
-    graft.Hygiene.release(vocab) // picks are driver-held; nothing pins blocks
+    // round r picks its merge on round r−1's vocab and applies it; the
+    // last pick needs no applied vocab
+    val last = graft.Hygiene.rounds(vocab0, rounds - 1) { vocab =>
+      val (l, rr) = pick(vocab)
+      vocab.select(replace(col("s"), lit(s" $l  $rr "), lit(s" $l$rr ")).as("s"),
+        col("wn"))
+    }
+    pick(last)
+    graft.Hygiene.release(last) // picks are driver-held; nothing pins blocks
     picks.toSeq
   }
 

@@ -271,7 +271,7 @@ class ScaleSpec extends SparkSuite {
     // must not pin block-manager memory monotonically — the measured failure
     // was a 10× slowdown (103.9 s vs 8.5 s triangle_parts) after ~130
     // queries leaked their lineage-cut blocks in one JVM. Operators release
-    // per-round internally (Hygiene.release in the peel/contraction loops);
+    // per-round internally (the Hygiene.rounds loops);
     // the session owner resets between queries (Hygiene.releaseAll). Both
     // layers are asserted here on the heaviest checkpoint users.
     val sc = spark.sparkContext
@@ -285,21 +285,51 @@ class ScaleSpec extends SparkSuite {
       "ann_ivfpq_res" -> (() => operators.Similarity.annIvfPqRes(spark, sfDir)),
       "bpe_merges" -> (() => operators.TextOps.bpeMerges(spark, sfDir)),
       "lr_quality" -> (() => operators.CorpusOps.lrQuality(spark, sfDir)),
-      // pins 3 terminal checkpoints: the loss frame, round 1 (weight_r1),
-      // and the final round — rounds 2..K−1 release inside the loop
-      "domain_mix" -> (() => operators.Sampling.domainMix(spark, sfDir)))
+      // pins its final round only: round 1's weight rides along as a column
+      "domain_mix" -> (() => operators.Sampling.domainMix(spark, sfDir)),
+      // the beam walks pin the shared undirected graph plus the frontier
+      // the lazy last hop reads — every earlier hop is released in the loop
+      "ann_graph_search" -> (() => operators.Similarity.annGraphSearch(spark, sfDir)),
+      "ann_graph_oos" -> (() => operators.Similarity.annGraphSearchOos(spark, sfDir)))
     chain.foreach { case (name, q) =>
       q().queryExecution.toRdd.count()
       // operator-owned round release: only terminal checkpoints (the ones
       // the returned plan still references) may remain — kcore without the
-      // in-loop release would leave rounds+1 = 7 here
+      // in-loop release would leave rounds+1 = 7 here, a walk that kept
+      // every hop 1 + hops = 4 (until the JVM collects the unreachable ones)
       val pinned = sc.getPersistentRDDs.size
-      assert(pinned <= 3,
+      assert(pinned <= 2,
         s"$name left $pinned pinned RDDs — per-round release regressed")
       Hygiene.releaseAll(spark, blocking = true)
       assert(sc.getPersistentRDDs.isEmpty,
         s"$name: checkpoint blocks survive Hygiene.releaseAll")
     }
+  }
+
+  test("Hygiene.rounds releases each earlier round, never a shared checkpoint") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.storage.StorageLevel
+    // storage levels are read off the RDD objects the test holds, so the
+    // JVM collecting an unreachable round cannot make a leak look released
+    def levels(df: DataFrame): Seq[StorageLevel] =
+      df.queryExecution.analyzed.collectLeaves().collect {
+        case l: LogicalRDD => l.rdd.getStorageLevel
+      }
+    val shared = spark.range(8).toDF("id").localCheckpoint()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val last = Hygiene.rounds(spark.range(6).toDF("id"), 3) { df =>
+      seen += df
+      df.join(shared, "id")
+    }
+    assert(seen.size == 3, "3 rounds run the step 3 times")
+    seen.foreach(df => assert(levels(df) == Seq(StorageLevel.NONE),
+      "an earlier round's checkpoint is still pinned"))
+    assert(levels(last).size == 1 && levels(last).head != StorageLevel.NONE)
+    assert(levels(shared).head != StorageLevel.NONE,
+      "the runner released a checkpoint that its step only reads")
+    assert(last.count() == 6)
+    Hygiene.releaseAll(spark, blocking = true)
   }
 
   test("Staged rebuilds when the source dir is regenerated in place") {
