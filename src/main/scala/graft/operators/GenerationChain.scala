@@ -1,4 +1,5 @@
 package graft.operators
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.io.File
 
@@ -46,7 +47,7 @@ final class GenerationChain(val root: String, val tables: Seq[String]) {
   }
 
   def read(spark: SparkSession, id: Long, table: String): DataFrame =
-    spark.read.parquet(tablePath(id, table))
+    Tables.parquet(spark, tablePath(id, table))
 
   /** Ids of COMPLETE generations, ascending — one readdir of `root`. */
   def list(): Seq[Long] = {

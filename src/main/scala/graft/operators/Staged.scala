@@ -1,6 +1,8 @@
 package graft.operators
+import graft.Tables
 import org.apache.spark.{JobExecutionStatus, SparkContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
@@ -68,6 +70,7 @@ object Staged {
       tables: Seq[String], what: String)(build: => Seq[DataFrame]): Boolean = {
     if (complete(target, tables)) return false
     System.err.println(s"[graft] $what (first use — later reads are free)")
+    val pinnedBefore = SparkContext.getOrCreate().getPersistentRDDs.keySet
     val frames = build
     require(frames.size == tables.size,
       s"$target: build yielded ${frames.size} frames for ${tables.size} tables")
@@ -80,6 +83,15 @@ object Staged {
       try tables.zip(frames).foreach { case (t, df) =>
         df.write.mode("overwrite").parquet(tableDir(tmp, t).toString)
       } finally sc.removeJobTag(tag)
+      // the checkpoints the build made (a round loop's last round, a
+      // checkpointed input) are dead once written: no reader plans over
+      // them, so free their blocks now instead of at the session's next
+      // Hygiene.releaseAll
+      frames.foreach(_.queryExecution.analyzed.collectLeaves().foreach {
+        case l: LogicalRDD if !pinnedBefore.contains(l.rdd.id) =>
+          l.rdd.unpersist(blocking = false)
+        case _ => ()
+      })
       require(complete(tmp, tables), s"build left no _SUCCESS in $tmp")
       // a legacy/corrupt target (exists but incomplete — e.g. one table of
       // a multi-table stage) blocks the rename: clear it; completeness can
@@ -134,7 +146,7 @@ object Staged {
   def parquet(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val dir = keyDir(key)
     publishOnce(dir, root, Seq(""), s"staging $key")(Seq(build))
-    spark.read.parquet(dir.toString)
+    Tables.parquet(spark, dir.toString)
   }
 
   /** Two tables built by ONE computation (e.g. PQ codebooks + the codes
@@ -151,7 +163,7 @@ object Staged {
       val (da, db) = build
       Seq(da, db)
     }
-    (spark.read.parquet(s"$dir/$a"), spark.read.parquet(s"$dir/$b"))
+    (Tables.parquet(spark, s"$dir/$a"), Tables.parquet(spark, s"$dir/$b"))
   }
 
   /** A source dir as a key segment: a human-readable flattened prefix
@@ -169,7 +181,12 @@ object Staged {
     * setLastModified workaround for exactly that; the per-file names
     * close it, and the spec now passes without touching the clock).
     *
-    * Deliberately NOT cached per session: the walk is pure filesystem
+    * Also the validity key of [[graft.Tables.parquet]]'s schema cache:
+    * every read of an immutable parquet source computes it afresh, and a
+    * new value re-infers that source's schema.
+    *
+    * Deliberately NOT cached per session — computed on every call, every
+    * read included: the walk is pure filesystem
     * metadata, measured 1.5 ms on the largest fixture here (tmpdata/sf1,
     * 186 files) and 0.2 ms on a driver sf dir — the generation chains'
     * one-walk-per-generation adds single-digit milliseconds to a
